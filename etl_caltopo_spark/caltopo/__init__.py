@@ -1,8 +1,8 @@
 """CalTopo domain layer — the Spark re-expression of the reference's
 entire dataflow (/root/reference/task.ts:63-160):
 
-    fetch (source) → typed decode (decode) → transform (transform)
-    → folder join (transform.attach_folder_paths) → sink (sink)
+    fetch (source) → typed decode and per-envelope folder lookup
+    (decode) → transform, folder path included (transform) → sink (sink)
 
 plus the schema-introspection Capabilities API (registry) and the
 FIXTURES.md F1-F10 quirk-matrix builder (fixtures).

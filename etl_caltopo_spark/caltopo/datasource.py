@@ -20,7 +20,7 @@ forms:
 
 Both yield the same (share_id, body_json) rows as
 ``source.fetch_envelopes``, so everything downstream (strict decode,
-transform, folder join, sinks) is source-agnostic.
+transform, folder lookup, sinks) is source-agnostic.
 
 The endpoint is configurable via ``baseUrl`` so tests point it at a
 local fixture server; no option defaults to a live network call

@@ -9,12 +9,14 @@ re-serializes non-string tokens, so no information is lost and the
 typed re-parse happens only in the geometry operators.
 
 Then the nested-field drill + explode (task.ts:92): one row per
-feature, properties flattened to the FIXTURES.md A.2 working schema.
+feature, properties flattened to the FIXTURES.md A.2 working schema,
+plus ``folder_title``: the title of the feature's folder, looked up in
+a folder map built from the same envelope (task.ts:90,142-152).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etl_caltopo_spark.caltopo.schemas import ENVELOPE_SCHEMA
@@ -61,12 +63,19 @@ def decode_envelope(
     else:
         parsed = parsed.filter(F.col("_env.result.state.features").isNotNull())
     ts_col = F.col("_env.result.timestamp")
-    # carry the envelope identity (map/share id) so multi-map batches
-    # keep per-map scope downstream — the folder lookup is per map
+    # carry the envelope identity (map/share id) into its feature rows
     carry = [c for c in ("share_id",) if c in envelopes.columns]
+    # the folder lookup gets its own projection so that it is computed
+    # once per envelope BELOW the Generate: in the explode's select,
+    # Spark would evaluate it above the Generate, carrying the whole
+    # features array into every exploded row
+    parsed = parsed.withColumn(
+        "_folders", _folder_lookup(F.col("_env.result.state.features"))
+    )
     feats = parsed.select(
         *carry,
         ts_col.alias("state_timestamp"),
+        "_folders",
         F.explode("_env.result.state.features").alias("f"),
     )
     p = "f.properties"
@@ -94,5 +103,26 @@ def decode_envelope(
         F.col(f"{p}.icon").alias("icon"),
         F.col("f.geometry.type").alias("geometry_type"),
         F.col("f.geometry.coordinates").alias("geometry_json"),
+        F.col("_folders")[F.col(f"{p}.folderId")].alias("folder_title"),
         "state_timestamp",
+    )
+
+
+def _folder_lookup(features: Column) -> Column:
+    """The envelope's folder id → title map (task.ts:90), built from
+    its own ``features`` array, so folder ids never leak across maps.
+    A repeated id keeps its LAST Folder, as JS ``Map.set`` does
+    (``map_from_entries`` would raise on the duplicate key instead).
+    Folders without an id match nothing."""
+    folders = F.filter(
+        features,
+        lambda f: (f["properties"]["class"] == "Folder") & f["id"].isNotNull(),
+    )
+    return F.aggregate(
+        folders,
+        F.create_map().cast("map<string,string>"),
+        lambda acc, f: F.map_concat(
+            F.map_filter(acc, lambda k, _: k != f["id"]),
+            F.create_map(f["id"], f["properties"]["title"]),
+        ),
     )

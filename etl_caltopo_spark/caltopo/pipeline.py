@@ -1,10 +1,11 @@
 """End-to-end CalTopo pipeline composition (ref task.ts:63-160).
 
-fetch → decode → split folders → drop null geometry → transform →
-folder join.  Everything between fetch and sink is one lazy DataFrame
-chain: Catalyst fuses the filters and projections into a single
-codegen stage, and the folder join is an explicit broadcast — the
-whole pipeline runs without a fact-side shuffle.
+fetch → decode (with each envelope's folder lookup) → split folders →
+drop null geometry → transform.  Everything between fetch and sink is
+one lazy DataFrame chain over a single scan of the source: the folder
+path comes from a lookup decode builds from each envelope's own
+features (task.ts:90,142-152), so there is no join, no exchange and no
+second read, and the chain runs unchanged on a stream.
 """
 
 from __future__ import annotations
@@ -14,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_caltopo_spark.caltopo.decode import decode_envelope
 from etl_caltopo_spark.caltopo.source import Fetcher, fetch_envelopes, validate_env
 from etl_caltopo_spark.caltopo.transform import (
-    attach_folder_paths,
     drop_null_geometry,
     split_folders,
     to_input_features,
@@ -23,11 +23,8 @@ from etl_caltopo_spark.caltopo.transform import (
 
 def run_pipeline(envelopes: DataFrame) -> DataFrame:
     """Envelope JSON rows → transformed InputFeature rows."""
-    features = decode_envelope(envelopes)
-    folders, rest = split_folders(features)
-    alive = drop_null_geometry(rest)
-    shaped = to_input_features(alive)
-    return attach_folder_paths(shaped, folders)
+    _, rest = split_folders(decode_envelope(envelopes))
+    return to_input_features(drop_null_geometry(rest))
 
 
 def run_from_api(

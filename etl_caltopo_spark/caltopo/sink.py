@@ -18,6 +18,7 @@ import time
 import urllib.error
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 Poster = Callable[[str, str], None]
@@ -212,24 +213,52 @@ def foreach_partition_post_idempotent(
 DRIVER_COLLECT_MAX = 10_000
 
 
+def _dispatch_on_count(
+    df: DataFrame,
+    driver_collect_max: int,
+    post_driver: Callable[[DataFrame], None],
+    post_partitions: Callable[[DataFrame], None],
+) -> int:
+    """Count ``df``, then POST it from the driver (at most
+    ``driver_collect_max`` features) or from the executors.  The frame
+    is persisted around the count, so both the count and the POSTs
+    read the source once: without the cache the POST would re-fetch
+    and re-decode every map.  A frame the caller already persisted is
+    left as it is.  Returns the feature count."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df = df.persist()
+    try:
+        n = df.count()
+        if n <= driver_collect_max:
+            post_driver(df)
+        else:
+            post_partitions(df)
+        return n
+    finally:
+        if owned:
+            df.unpersist()
+
+
 def submit(
     df: DataFrame,
     url: str,
     poster: Poster,
     driver_collect_max: int = DRIVER_COLLECT_MAX,
 ) -> int:
-    """Default sink (R16, task.ts:154-159).  One count pass decides
+    """Default sink (R16, task.ts:154-159).  The feature count decides
     the path: at-or-below ``driver_collect_max`` features, a single
     driver-side POST (reference-faithful — the Lambda also submits the
     whole collection at once); above it, executor-side per-partition
-    POSTs so the payload never materializes on the driver.  Returns
-    the feature count either way."""
-    n = df.count()
-    if n <= driver_collect_max:
-        post_feature_collection(df, url, poster)
-    else:
-        foreach_partition_post(df, url, poster)
-    return n
+    POSTs so the payload never materializes on the driver.  The source
+    is read once for both the count and the POSTs.  Returns the
+    feature count either way."""
+    return _dispatch_on_count(
+        df,
+        driver_collect_max,
+        lambda d: post_feature_collection(d, url, poster),
+        lambda d: foreach_partition_post(d, url, poster),
+    )
 
 
 def submit_idempotent(
@@ -246,21 +275,24 @@ def submit_idempotent(
     content-keyed idempotency plus bounded exponential-backoff retries.
     Use this form against any real endpoint; plain :func:`submit`
     stays for fire-and-forget test posters."""
-    n = df.count()
-    if n <= driver_collect_max:
-        fc = to_feature_collection(df)
+
+    def post_driver(d: DataFrame) -> None:
+        fc = to_feature_collection(d)
         # canonicalize exactly like the partition path (ADVICE r12):
         # collect() order is not deterministic across re-runs, and a
         # reordered body would change the content-derived key — a
         # redelivered batch must serialize byte-identically on BOTH
         # dispatch paths for the contract to hold
         fc["features"].sort(key=lambda f: str(f["id"]))
-        body = json.dumps(fc)
         post_idempotent(
-            poster, url, body, max_retries=max_retries, backoff_s=backoff_s
+            poster, url, json.dumps(fc), max_retries=max_retries, backoff_s=backoff_s
         )
-    else:
-        foreach_partition_post_idempotent(
-            df, url, poster, max_retries=max_retries, backoff_s=backoff_s
-        )
-    return n
+
+    return _dispatch_on_count(
+        df,
+        driver_collect_max,
+        post_driver,
+        lambda d: foreach_partition_post_idempotent(
+            d, url, poster, max_retries=max_retries, backoff_s=backoff_s
+        ),
+    )

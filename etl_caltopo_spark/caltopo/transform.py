@@ -78,6 +78,9 @@ def to_input_features(features: DataFrame) -> DataFrame:
     - Point + marker-color: '#'-prefix, opacity 1,
       key deleted from metadata                     (R14, task.ts:132-136)
     - all source properties under metadata          (R7,  task.ts:107)
+    - path = '/' + the title decode looked up in the
+      feature's own envelope; null when the folderId
+      is null or dangling (quirk Q5)                (R15, task.ts:142-152)
     """
     truncated = truncate_coordinates(features)
     is_point = F.col("geometry_type") == "Point"
@@ -125,15 +128,19 @@ def to_input_features(features: DataFrame) -> DataFrame:
         "folder_id",
         "geometry_type",
         "geometry_json",
+        F.concat(F.lit("/"), F.col("folder_title")).alias("path"),
     )
 
 
 def attach_folder_paths(features: DataFrame, folders: DataFrame) -> DataFrame:
-    """R15 (task.ts:142-152): broadcast left lookup join to the folder
-    dimension; matched rows get path='/'+folder.title, dangling or
-    null folder ids keep a null path (quirk Q5).  In multi-map batches
-    the join key includes the map scope (share_id) so folder ids never
-    leak across maps."""
+    """R15 (task.ts:142-152) against a separately held folder
+    dimension, e.g. a stream joined to a static one: broadcast left
+    lookup join, replacing the path :func:`to_input_features` took
+    from the envelope's own lookup; matched rows get
+    path='/'+folder.title, dangling or null folder ids keep a null
+    path (quirk Q5).  In multi-map batches the join key includes the
+    map scope (share_id) so folder ids never leak across maps.
+    ``run_pipeline`` does not need it."""
     cond = features["folder_id"] == folders["folder_key"]
     drop_cols = ["folder_key", "folder_title"]
     if "share_id" in features.columns and "share_id" in folders.columns:

@@ -1,7 +1,7 @@
 """The CalTopo domain pipeline graded END-TO-END as a query id
 (VERDICT r5 #4): the reference's composed dataflow (task.ts:63-160) —
-decode → folder split → null-geometry drop → InputFeature projection →
-broadcast folder join — run over the FIXTURES.md Family-A quirk
+decode with the per-envelope folder lookup → folder split →
+null-geometry drop → InputFeature projection with the folder path — run over the FIXTURES.md Family-A quirk
 envelope (F1-F10) and hash-compared against a DuckDB replay of the
 same envelope JSON.
 
@@ -22,8 +22,8 @@ pytest coverage.  One plan now exercises, with an oracle:
 - R12/R13 archived const + Point ⇒ 'u-d-p'                task.ts:128-130
 - R14 '#'-prefix + opacity 1 + metadata key delete, Point
   only (F7 yes / F9 no)                                   task.ts:132-136
-- R15 broadcast left folder join; dangling → null path
-  (F5 '/Team Alpha', F6 null)                             task.ts:142-152
+- R15 folder path from the envelope's own folder lookup;
+  dangling → null path (F5 '/Team Alpha', F6 null)        task.ts:142-152
 
 Gradeable shape: the map column is flattened to a sorted ``k=v``
 join (both engines sort the same ASCII byte order) and the truncated
@@ -34,10 +34,9 @@ bit-identical.
 
 Scale note: the fixture envelope is deliberately tiny (the grade is
 about compositional semantics), but the PLAN is the production one —
-single codegen stage for decode+filters+projection, explicit
-broadcast for the folder dimension, no fact-side shuffle
-(tests/test_caltopo_pipeline.py pins the BroadcastHashJoin) — and
-runs unchanged over any number of envelope rows.
+one scan of the source, the folder lookup computed per envelope below
+the explode, no join and no exchange (tests/test_plans.py pins this) —
+and runs unchanged over any number of envelope rows.
 """
 
 from __future__ import annotations

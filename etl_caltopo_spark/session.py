@@ -37,6 +37,17 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 
+def default_driver_memory() -> str:
+    """About half the host's RAM.  In local mode the driver JVM is also
+    the executor, and the other half is left to Spark's Python workers
+    and the OS."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # pragma: no cover - no sysconf
+        return "4g"
+    return f"{total // 2 // 2**20}m"
+
+
 def default_master() -> str:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     return os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -61,7 +72,8 @@ def build_spark(
     # small for broadcast builds + cached signatures on a large box.
     # Only effective at first JVM start; harmless afterwards.
     builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
     )
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))

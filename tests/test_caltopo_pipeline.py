@@ -8,7 +8,7 @@ import json
 
 import pytest
 
-from etl_caltopo_spark.caltopo.fixtures import fixture_envelope_df
+from etl_caltopo_spark.caltopo.fixtures import _feature, fixture_envelope_df
 from etl_caltopo_spark.caltopo.pipeline import run_from_api, run_pipeline
 from etl_caltopo_spark.caltopo.registry import schema
 from etl_caltopo_spark.caltopo.sink import to_feature_collection
@@ -144,6 +144,48 @@ def test_many_envelopes_fan_out(spark):
     assert [r["path"] for r in f5] == ["/Team Alpha"]
 
 
+def _envelope(features: list[dict]) -> str:
+    env = json.loads(fixture_envelope_json())
+    env["result"]["state"]["features"] = features
+    return json.dumps(env)
+
+
+_POINT = {"type": "Point", "coordinates": [1.0, 1.0]}
+
+
+def test_duplicate_folder_id_last_folder_wins(spark):
+    """Two Folders with one id in one map: no error, each member
+    emitted once, and the later Folder's title wins, as Map.set does
+    (task.ts:90)."""
+    body = _envelope([
+        _feature("dup", "Folder", "First"),
+        _feature("m1", "Marker", "member", _POINT, folder_id="dup"),
+        _feature("dup", "Folder", "Second"),
+    ])
+    df = spark.createDataFrame([("S", body)], "share_id string, body_json string")
+    rows = run_pipeline(df).select("id", "path").collect()
+    assert [(r["id"], r["path"]) for r in rows] == [("m1", "/Second")]
+
+
+def test_folder_ids_do_not_leak_across_maps(spark):
+    """A folder id reused by another map of the same batch resolves
+    only within its own map; a map without that Folder gets no path."""
+    bodies = [
+        ("A", _envelope([
+            _feature("fold", "Folder", "Alpha"),
+            _feature("a1", "Marker", "a", _POINT, folder_id="fold"),
+        ])),
+        ("B", _envelope([_feature("b1", "Marker", "b", _POINT, folder_id="fold")])),
+        ("C", _envelope([
+            _feature("c1", "Marker", "c", _POINT, folder_id="fold"),
+            _feature("fold", "Folder", "Charlie"),
+        ])),
+    ]
+    df = spark.createDataFrame(bodies, "share_id string, body_json string")
+    paths = {r["id"]: r["path"] for r in run_pipeline(df).collect()}
+    assert paths == {"a1": "/Alpha", "b1": None, "c1": "/Charlie"}
+
+
 def test_env_validation():
     assert validate_env({"ShareId": "X"})["DEBUG"] is False
     with pytest.raises(ValueError):
@@ -256,3 +298,23 @@ def test_submit_dispatches_on_size(spark, tmp_path):
     for f in files:
         posted += [feat["id"] for feat in _json.loads(open(f).read())["features"]]
     assert sorted(posted) == expected
+
+
+def test_submit_releases_only_its_own_cache(spark):
+    """submit persists its input for the count and the POST, then
+    unpersists it; a frame the caller persisted stays persisted."""
+    from pyspark import StorageLevel
+
+    from etl_caltopo_spark.caltopo.sink import submit
+
+    def poster(url: str, body: str) -> None:
+        pass
+
+    df = run_pipeline(fixture_envelope_df(spark))
+    assert submit(df, "https://example.test/layer", poster) == 14
+    assert df.storageLevel == StorageLevel.NONE
+
+    cached = run_pipeline(fixture_envelope_df(spark)).persist()
+    assert submit(cached, "https://example.test/layer", poster) == 14
+    assert cached.storageLevel != StorageLevel.NONE
+    cached.unpersist()

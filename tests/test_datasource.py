@@ -278,3 +278,32 @@ def test_submit_idempotent_partition_path_survives_redelivery(
     )
     posted2 = sorted(f["id"] for fc in state["posts"] for f in fc["features"])
     assert posted2 == expected
+
+
+@pytest.mark.parametrize("driver_collect_max", [10_000, 0])
+def test_submit_fetches_each_map_once(spark, fixture_server, driver_collect_max):
+    """One submit of the pipeline over the caltopo source makes exactly
+    one GET per map, on the driver-collect path and on the
+    per-partition path alike: the count and the POSTs share one read."""
+    from etl_caltopo_spark.caltopo.sink import submit_idempotent
+
+    url, state = fixture_server
+    register(spark)
+    maps = ["MAP-A", "MAP-B", "MAP-C"]
+    source = (
+        spark.read.format("caltopo")
+        .option("shareIds", ",".join(maps))
+        .option("baseUrl", url)
+        .load()
+    )
+    state["requests"].clear()
+    n = submit_idempotent(
+        run_pipeline(source),
+        f"{url}/api/v1/layer/ONCE/submit",
+        _http_header_poster,
+        driver_collect_max=driver_collect_max,
+        backoff_s=0.001,
+    )
+    assert n == 3 * 14
+    gets = [p.strip("/").split("/")[-3] for p in state["requests"]]
+    assert sorted(gets) == maps

@@ -45,9 +45,29 @@ def test_dimension_joins_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_folder_join_broadcast(spark):
-    plan = plan_of(run_pipeline(fixture_envelope_df(spark)))
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+def _walk(plan):
+    """Pre-order walk over a JVM physical plan tree."""
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _walk(kids.apply(i))
+
+
+def test_pipeline_scans_source_once(spark):
+    """run_pipeline reads its source once: no self-join, no exchange of
+    any kind.  The per-envelope folder lookup is computed BELOW the
+    Generate, so the exploded rows never carry the features array."""
+    plan = run_pipeline(fixture_envelope_df(spark))._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    names = [p.nodeName() for p in _walk(plan)]
+    assert sum(n.startswith("Scan") for n in names) == 1, names
+    assert not [n for n in names if "Join" in n or "Exchange" in n or "Cartesian" in n]
+    (generate,) = [p for p in _walk(plan) if p.nodeName() == "Generate"]
+    below = {p.simpleString(1000) for p in _walk(generate.children().apply(0))}
+    above = {p.simpleString(1000) for p in _walk(plan)} - below
+    assert any(" AS _folders" in s for s in below)
+    assert not any("aggregate(" in s for s in above)
 
 
 def test_filter_pushdown_reaches_parquet(spark, sf_dir):
