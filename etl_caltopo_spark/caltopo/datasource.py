@@ -43,18 +43,10 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from etl_caltopo_spark.caltopo.sink import post_rows, urllib_header_poster
+from etl_caltopo_spark.caltopo.source import BASE_URL, default_fetcher, map_state_url
+
 SCHEMA = "share_id string, body_json string"
-
-
-def _fetch(url: str) -> str:
-    from urllib.request import urlopen
-
-    with urlopen(url, timeout=30) as resp:
-        return resp.read().decode("utf-8")
-
-
-def _map_url(base_url: str, share_id: str, since: int) -> str:
-    return f"{base_url}/api/v1/map/{share_id}/since/{since}"
 
 
 def _parse_options(options: dict) -> tuple[list[str], int, str]:
@@ -63,7 +55,7 @@ def _parse_options(options: dict) -> tuple[list[str], int, str]:
     if not share_ids:
         raise ValueError("caltopo source requires option shareIds=<id>[,<id>...]")
     since = int(options.get("since", "-500"))
-    base_url = options.get("baseurl", "https://caltopo.com").rstrip("/")
+    base_url = options.get("baseurl", BASE_URL).rstrip("/")
     return share_ids, since, base_url
 
 
@@ -78,7 +70,7 @@ class CalTopoBatchReader(DataSourceReader):
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
         sid = partition.value
-        yield (sid, _fetch(_map_url(self.base_url, sid, self.since)))
+        yield (sid, default_fetcher(map_state_url(sid, self.since, self.base_url)))
 
 
 class CalTopoStreamReader(SimpleDataSourceStreamReader):
@@ -96,7 +88,7 @@ class CalTopoStreamReader(SimpleDataSourceStreamReader):
         since = dict(start["since"])
         rows: list[tuple] = []
         for sid in self.share_ids:
-            body = _fetch(_map_url(self.base_url, sid, int(since[sid])))
+            body = default_fetcher(map_state_url(sid, int(since[sid]), self.base_url))
             rows.append((sid, body))
             try:
                 ts = json.loads(body).get("result", {}).get("timestamp")
@@ -114,13 +106,16 @@ class _PostedChunk(WriterCommitMessage):
 
 class CalTopoWriter(DataSourceWriter):
     """Executor-side FeatureCollection POST as a native write format
-    (R16, ``task.ts:154-159``): each partition submits its own chunk —
-    ``df.write.format("caltopo").option("url", ...).mode("append")
-    .save()`` is the sink twin of ``sink.foreach_partition_post``,
-    with the write wired into Spark's commit protocol (a failed
-    partition retries alone; ``commit`` sees per-chunk feature
-    counts).  Rows must carry the transformed InputFeature columns
-    (the output of ``pipeline.run_pipeline``)."""
+    (R16, ``task.ts:154-159``): ``df.write.format("caltopo")
+    .option("url", ...).mode("append").save()`` posts each non-empty
+    partition as one chunk through ``sink.post_rows``, the path
+    ``sink.submit_idempotent`` takes above its collect threshold, so
+    every chunk carries its idempotency key and retries a 503.  The
+    write is wired into Spark's commit protocol (a failed partition
+    retries alone, and its re-sent chunk collapses on the key;
+    ``commit`` sees per-chunk feature counts).  Rows must carry the
+    transformed InputFeature columns (the output of
+    ``pipeline.run_pipeline``)."""
 
     def __init__(self, options: dict) -> None:
         self.url = options.get("url", "")
@@ -128,24 +123,10 @@ class CalTopoWriter(DataSourceWriter):
             raise ValueError("caltopo writer requires option url=<submit endpoint>")
 
     def write(self, iterator) -> _PostedChunk:
-        from urllib.request import Request, urlopen
-
-        from etl_caltopo_spark.caltopo.sink import _row_to_feature
-
-        feats = [_row_to_feature(r) for r in iterator]
-        if feats:
-            payload = json.dumps(
-                {"type": "FeatureCollection", "features": feats}
-            ).encode("utf-8")
-            req = Request(
-                self.url,
-                data=payload,
-                headers={"Content-Type": "application/json"},
-                method="POST",
-            )
-            with urlopen(req, timeout=30) as resp:
-                resp.read()
-        return _PostedChunk(n_features=len(feats))
+        rows = list(iterator)
+        if not rows:
+            return _PostedChunk()
+        return _PostedChunk(n_features=post_rows(rows, self.url, urllib_header_poster))
 
     def commit(self, messages) -> None:
         # nothing to finalize server-side; counts surface for logging

@@ -34,9 +34,9 @@ def run_from_api(
     fetcher: Fetcher | None = None,
 ) -> DataFrame:
     """The reference's control() flow (task.ts:63-160): validate env,
-    fetch the map delta, run the transform pipeline.  The default sink
-    is sink.submit (size-dispatched driver/executor POST); parquet is
-    the archive path."""
+    fetch the map delta, run the transform pipeline.  Submit the result
+    with ``sink.submit_idempotent`` (size-dispatched driver/executor
+    POST) or ``df.write.format("caltopo")``."""
     cfg = validate_env(env)
     envelopes = fetch_envelopes(spark, [cfg["ShareId"]], since, fetcher)
     return run_pipeline(envelopes)

@@ -1,13 +1,17 @@
-"""Sinks (ref task.ts:154-159: POST the FeatureCollection to the
+"""Sink (ref task.ts:154-159: POST the FeatureCollection to the
 CloudTAK ETL API).
 
-The default entry point is :func:`submit`, which dispatches on output
-size: at reference scale (a map layer is O(10^2..10^4) features) it
-mirrors the Lambda's single driver-side POST; beyond
-``DRIVER_COLLECT_MAX`` features it switches to executor-side
-per-partition POSTs (``foreach_partition_post``) so nothing large is
-ever collected to the driver.  The parquet sink is the test/archive
-path.
+Every POST goes through :func:`post_rows`: the rows become one
+canonical FeatureCollection (features sorted by id) sent through
+:func:`post_idempotent`, so each body carries a content-derived
+``Idempotency-Key`` and failed attempts retry a bounded number of
+times.  :func:`submit_idempotent` is the entry point and dispatches on
+output size: at reference scale (a map layer is O(10^2..10^4)
+features) it mirrors the Lambda's single driver-side POST; beyond
+``DRIVER_COLLECT_MAX`` features each partition POSTs its own chunk, so
+nothing large is ever collected to the driver.  The ``caltopo`` write
+format (``datasource.CalTopoWriter``) posts each partition the same
+way.
 """
 
 from __future__ import annotations
@@ -16,12 +20,12 @@ import hashlib
 import json
 import time
 import urllib.error
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-Poster = Callable[[str, str], None]
+from etl_caltopo_spark.caltopo import source
 
 #: header-carrying poster: (url, body, headers) -> None; MUST raise on
 #: a non-success response so the retry loop can see the failure
@@ -69,33 +73,28 @@ def _row_to_feature(row) -> dict:
     }
 
 
-def to_feature_collection(df: DataFrame) -> dict:
-    """Collect transformed rows into a GeoJSON FeatureCollection dict
-    (the reference's submit payload shape, task.ts:154-157).  Only for
-    reference-scale outputs — O(10^2..10^4) features per map."""
+def to_feature_collection(rows: Iterable) -> dict:
+    """Transformed rows → the canonical GeoJSON FeatureCollection dict
+    (the reference's submit payload shape, task.ts:154-157).  Features
+    are sorted by id: a re-run that meets the same rows in another
+    order (``collect()`` order, a Spark task re-attempt) serializes the
+    byte-identical body and so carries the identical idempotency key."""
     return {
         "type": "FeatureCollection",
-        "features": [_row_to_feature(r) for r in df.collect()],
+        "features": sorted(
+            (_row_to_feature(r) for r in rows), key=lambda f: str(f["id"])
+        ),
     }
 
 
-def post_feature_collection(df: DataFrame, url: str, poster: Poster) -> int:
-    """Driver-side submit (R16).  Returns the feature count."""
-    fc = to_feature_collection(df)
-    poster(url, json.dumps(fc))
+def post_rows(rows: Iterable, url: str, poster: HeaderPoster, **retry) -> int:
+    """POST ``rows`` as one canonical FeatureCollection through
+    :func:`post_idempotent` (``retry`` is passed on to it).  Every sink
+    path posts through here: the driver-side submit, the per-partition
+    submit and the ``caltopo`` writer.  Returns the feature count."""
+    fc = to_feature_collection(rows)
+    post_idempotent(poster, url, json.dumps(fc), **retry)
     return len(fc["features"])
-
-
-def foreach_partition_post(df: DataFrame, url: str, poster: Poster) -> None:
-    """Executor-side batched submit for large outputs: each partition
-    POSTs its own FeatureCollection chunk — no driver collect."""
-
-    def handle(rows) -> None:
-        feats = [_row_to_feature(r) for r in rows]
-        if feats:
-            poster(url, json.dumps({"type": "FeatureCollection", "features": feats}))
-
-    df.foreachPartition(handle)
 
 
 def urllib_header_poster(url: str, body: str, headers: dict) -> None:
@@ -103,13 +102,15 @@ def urllib_header_poster(url: str, body: str, headers: dict) -> None:
     given headers and RAISES on any non-2xx response (urllib's
     HTTPError), which is exactly what :func:`post_idempotent`'s retry
     loop needs.  Importable on executors (lives in the package, not in
-    a test module), so it works under ``foreachPartition``."""
+    a test module), so it works under ``foreachPartition``.  A sink
+    that never answers raises after ``source.HTTP_TIMEOUT_S``, so the
+    retries still run."""
     from urllib.request import Request, urlopen
 
     req = Request(
         url, data=body.encode("utf-8"), headers=headers, method="POST"
     )
-    with urlopen(req) as resp:
+    with urlopen(req, timeout=source.HTTP_TIMEOUT_S) as resp:
         resp.read()
 
 
@@ -176,89 +177,7 @@ def post_idempotent(
             attempt += 1
 
 
-def foreach_partition_post_idempotent(
-    df: DataFrame,
-    url: str,
-    poster: HeaderPoster,
-    max_retries: int = 4,
-    backoff_s: float = 0.05,
-) -> None:
-    """Executor-side batched submit with the redelivery contract: each
-    partition POSTs its FeatureCollection chunk through
-    :func:`post_idempotent`.  Features are CANONICALIZED (sorted by
-    id) before serialization so a Spark task re-attempt — which
-    re-runs the same partition but may iterate rows in a different
-    order — still produces the byte-identical body and therefore the
-    identical key: speculative execution and task retries cannot
-    double-submit.  Residual (documented, not solved here): a
-    non-deterministic UPSTREAM that changes partition MEMBERSHIP
-    between attempts changes chunk contents — the same caveat every
-    content-keyed sink carries; determinism of the feeding plan is
-    the caller's contract (same rule as the rank operator's
-    tiebreak-proxy clamp, HANDOFF r10 #2)."""
-
-    def handle(rows) -> None:
-        feats = sorted(
-            (_row_to_feature(r) for r in rows), key=lambda f: str(f["id"])
-        )
-        if feats:
-            body = json.dumps({"type": "FeatureCollection", "features": feats})
-            post_idempotent(
-                poster, url, body, max_retries=max_retries, backoff_s=backoff_s
-            )
-
-    df.foreachPartition(handle)
-
-
 DRIVER_COLLECT_MAX = 10_000
-
-
-def _dispatch_on_count(
-    df: DataFrame,
-    driver_collect_max: int,
-    post_driver: Callable[[DataFrame], None],
-    post_partitions: Callable[[DataFrame], None],
-) -> int:
-    """Count ``df``, then POST it from the driver (at most
-    ``driver_collect_max`` features) or from the executors.  The frame
-    is persisted around the count, so both the count and the POSTs
-    read the source once: without the cache the POST would re-fetch
-    and re-decode every map.  A frame the caller already persisted is
-    left as it is.  Returns the feature count."""
-    owned = df.storageLevel == StorageLevel.NONE
-    if owned:
-        df = df.persist()
-    try:
-        n = df.count()
-        if n <= driver_collect_max:
-            post_driver(df)
-        else:
-            post_partitions(df)
-        return n
-    finally:
-        if owned:
-            df.unpersist()
-
-
-def submit(
-    df: DataFrame,
-    url: str,
-    poster: Poster,
-    driver_collect_max: int = DRIVER_COLLECT_MAX,
-) -> int:
-    """Default sink (R16, task.ts:154-159).  The feature count decides
-    the path: at-or-below ``driver_collect_max`` features, a single
-    driver-side POST (reference-faithful — the Lambda also submits the
-    whole collection at once); above it, executor-side per-partition
-    POSTs so the payload never materializes on the driver.  The source
-    is read once for both the count and the POSTs.  Returns the
-    feature count either way."""
-    return _dispatch_on_count(
-        df,
-        driver_collect_max,
-        lambda d: post_feature_collection(d, url, poster),
-        lambda d: foreach_partition_post(d, url, poster),
-    )
 
 
 def submit_idempotent(
@@ -269,30 +188,35 @@ def submit_idempotent(
     max_retries: int = 4,
     backoff_s: float = 0.05,
 ) -> int:
-    """:func:`submit` with the redelivery contract on BOTH paths
-    (VERDICT r11 #3): the driver-side single POST and the executor-side
-    per-partition POSTs all go through :func:`post_idempotent` —
-    content-keyed idempotency plus bounded exponential-backoff retries.
-    Use this form against any real endpoint; plain :func:`submit`
-    stays for fire-and-forget test posters."""
+    """The sink (R16, task.ts:154-159).  The feature count decides the
+    path: at-or-below ``driver_collect_max`` features, a single
+    driver-side POST (reference-faithful — the Lambda also submits the
+    whole collection at once); above it, each partition POSTs its own
+    chunk so the payload never materializes on the driver.  Every POST
+    goes through :func:`post_rows`.  The frame is persisted around the
+    count, so the count and the POSTs read the source once: without
+    the cache the POSTs would re-fetch and re-decode every map.  A
+    frame the caller already persisted is left as it is.  Determinism
+    of the feeding plan is the caller's contract: an upstream that
+    changes partition membership between task attempts changes chunk
+    contents, and so their keys.  Returns the feature count."""
+    retry = {"max_retries": max_retries, "backoff_s": backoff_s}
 
-    def post_driver(d: DataFrame) -> None:
-        fc = to_feature_collection(d)
-        # canonicalize exactly like the partition path (ADVICE r12):
-        # collect() order is not deterministic across re-runs, and a
-        # reordered body would change the content-derived key — a
-        # redelivered batch must serialize byte-identically on BOTH
-        # dispatch paths for the contract to hold
-        fc["features"].sort(key=lambda f: str(f["id"]))
-        post_idempotent(
-            poster, url, json.dumps(fc), max_retries=max_retries, backoff_s=backoff_s
-        )
+    def post_partition(rows) -> None:
+        rows = list(rows)
+        if rows:
+            post_rows(rows, url, poster, **retry)
 
-    return _dispatch_on_count(
-        df,
-        driver_collect_max,
-        post_driver,
-        lambda d: foreach_partition_post_idempotent(
-            d, url, poster, max_retries=max_retries, backoff_s=backoff_s
-        ),
-    )
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df = df.persist()
+    try:
+        n = df.count()
+        if n <= driver_collect_max:
+            post_rows(df.collect(), url, poster, **retry)
+        else:
+            df.foreachPartition(post_partition)
+        return n
+    finally:
+        if owned:
+            df.unpersist()

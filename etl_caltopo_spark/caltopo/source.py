@@ -27,6 +27,10 @@ Fetcher = Callable[[str], str]
 
 BASE_URL = "https://caltopo.com"
 
+#: seconds an HTTP call waits for the server, for the map GETs and the
+#: sink POSTs alike; read at call time
+HTTP_TIMEOUT_S = 30.0
+
 
 def validate_env(env: dict) -> dict:
     """R1 (task.ts:8-16,64): validate job config against the declared
@@ -43,15 +47,15 @@ def validate_env(env: dict) -> dict:
     return merged
 
 
-def map_state_url(share_id: str, since: int = -500) -> str:
+def map_state_url(share_id: str, since: int = -500, base_url: str = BASE_URL) -> str:
     """task.ts:68 — the delta-window URL."""
-    return f"{BASE_URL}/api/v1/map/{share_id}/since/{since}"
+    return f"{base_url}/api/v1/map/{share_id}/since/{since}"
 
 
-def default_fetcher(url: str) -> str:  # pragma: no cover - network
+def default_fetcher(url: str) -> str:
     from urllib.request import urlopen
 
-    with urlopen(url, timeout=30) as resp:
+    with urlopen(url, timeout=HTTP_TIMEOUT_S) as resp:
         return resp.read().decode("utf-8")
 
 

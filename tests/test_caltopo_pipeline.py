@@ -106,7 +106,7 @@ def test_metadata_passthrough(result):
 
 def test_sink_feature_collection(spark):
     out = run_pipeline(fixture_envelope_df(spark))
-    fc = to_feature_collection(out)
+    fc = to_feature_collection(out.collect())
     assert fc["type"] == "FeatureCollection"
     by_id = {f["id"]: f for f in fc["features"]}
     f7 = by_id["F7"]
@@ -203,17 +203,17 @@ def test_foreach_partition_post_sink(spark, tmp_path):
     import json as _json
     import uuid
 
-    from etl_caltopo_spark.caltopo.sink import foreach_partition_post
+    from etl_caltopo_spark.caltopo.sink import submit_idempotent
 
     out_dir = tmp_path / "posts"
     out_dir.mkdir()
 
-    def poster(url: str, body: str) -> None:
+    def poster(url: str, body: str, headers: dict) -> None:
         # executor-side capture: one file per partition POST
         (out_dir / f"{uuid.uuid4().hex}.json").write_text(body)
 
     df = run_pipeline(fixture_envelope_df(spark)).repartition(4)
-    foreach_partition_post(df, "https://example.test/layer", poster)
+    submit_idempotent(df, "https://example.test/layer", poster, driver_collect_max=0)
     posted_ids = []
     for f in glob.glob(str(out_dir / "*.json")):
         fc = _json.loads(open(f).read())
@@ -259,14 +259,14 @@ def test_schema_introspection():
     assert [f["name"] for f in parsed["fields"]] == ["ShareId", "DEBUG"]
 
 def test_submit_dispatches_on_size(spark, tmp_path):
-    """sink.submit is the default sink: one driver-side POST at
-    reference scale, executor-side partition POSTs above the
-    threshold — same feature multiset either way."""
+    """submit_idempotent is the sink: one driver-side POST at reference
+    scale, executor-side partition POSTs above the threshold — same
+    feature multiset either way."""
     import glob
     import json as _json
     import uuid
 
-    from etl_caltopo_spark.caltopo.sink import submit
+    from etl_caltopo_spark.caltopo.sink import submit_idempotent
 
     df = run_pipeline(fixture_envelope_df(spark)).repartition(4)
     expected = sorted(r["id"] for r in df.collect())
@@ -274,10 +274,10 @@ def test_submit_dispatches_on_size(spark, tmp_path):
     # small output → single driver POST
     driver_posts = []
 
-    def driver_poster(url: str, body: str) -> None:
+    def driver_poster(url: str, body: str, headers: dict) -> None:
         driver_posts.append(body)
 
-    n = submit(df, "https://example.test/layer", driver_poster)
+    n = submit_idempotent(df, "https://example.test/layer", driver_poster)
     assert n == len(expected)
     assert len(driver_posts) == 1
     fc = _json.loads(driver_posts[0])
@@ -287,10 +287,12 @@ def test_submit_dispatches_on_size(spark, tmp_path):
     out_dir = tmp_path / "posts"
     out_dir.mkdir()
 
-    def part_poster(url: str, body: str) -> None:
+    def part_poster(url: str, body: str, headers: dict) -> None:
         (out_dir / f"{uuid.uuid4().hex}.json").write_text(body)
 
-    n = submit(df, "https://example.test/layer", part_poster, driver_collect_max=5)
+    n = submit_idempotent(
+        df, "https://example.test/layer", part_poster, driver_collect_max=5
+    )
     assert n == len(expected)
     files = glob.glob(str(out_dir / "*.json"))
     assert len(files) > 1  # partition path, not one driver payload
@@ -301,20 +303,20 @@ def test_submit_dispatches_on_size(spark, tmp_path):
 
 
 def test_submit_releases_only_its_own_cache(spark):
-    """submit persists its input for the count and the POST, then
-    unpersists it; a frame the caller persisted stays persisted."""
+    """submit_idempotent persists its input for the count and the POST,
+    then unpersists it; a frame the caller persisted stays persisted."""
     from pyspark import StorageLevel
 
-    from etl_caltopo_spark.caltopo.sink import submit
+    from etl_caltopo_spark.caltopo.sink import submit_idempotent
 
-    def poster(url: str, body: str) -> None:
+    def poster(url: str, body: str, headers: dict) -> None:
         pass
 
     df = run_pipeline(fixture_envelope_df(spark))
-    assert submit(df, "https://example.test/layer", poster) == 14
+    assert submit_idempotent(df, "https://example.test/layer", poster) == 14
     assert df.storageLevel == StorageLevel.NONE
 
     cached = run_pipeline(fixture_envelope_df(spark)).persist()
-    assert submit(cached, "https://example.test/layer", poster) == 14
+    assert submit_idempotent(cached, "https://example.test/layer", poster) == 14
     assert cached.storageLevel != StorageLevel.NONE
     cached.unpersist()

@@ -158,6 +158,7 @@ def test_write_format_posts_feature_collections(spark, fixture_server):
     out = run_pipeline(fixture_envelope_df(spark)).repartition(4)
     expected = sorted(r["id"] for r in out.collect())
     state["posts"] = []
+    state["seen_keys"] = set()
     (
         out.write.format("caltopo")
         .option("url", f"{url}/api/v1/layer/TEST/submit")
@@ -186,6 +187,7 @@ def test_post_idempotent_retries_through_flaky_server(fixture_server):
 
     url, state = fixture_server
     state["posts"] = []
+    state["seen_keys"] = set()
     state["fail_next"] = 2
     key = post_idempotent(
         _http_header_poster,
@@ -228,6 +230,7 @@ def test_double_delivery_collapses_on_idempotency_key(fixture_server):
 
     url, state = fixture_server
     state["posts"] = []
+    state["seen_keys"] = set()
     body = '{"type": "FeatureCollection", "features": [{"id": "dup"}]}'
     k1 = post_idempotent(_http_header_poster, f"{url}/api/x", body, backoff_s=0.001)
     k2 = post_idempotent(_http_header_poster, f"{url}/api/x", body, backoff_s=0.001)
@@ -255,6 +258,7 @@ def test_submit_idempotent_partition_path_survives_redelivery(
     out = run_pipeline(fixture_envelope_df(spark)).repartition(4)
     expected = sorted(r["id"] for r in out.collect())
     state["posts"] = []
+    state["seen_keys"] = set()
     state["fail_next"] = 3  # sprinkle failures across partition posts
     n = submit_idempotent(
         out,
@@ -307,3 +311,61 @@ def test_submit_fetches_each_map_once(spark, fixture_server, driver_collect_max)
     assert n == 3 * 14
     gets = [p.strip("/").split("/")[-3] for p in state["requests"]]
     assert sorted(gets) == maps
+
+
+def test_write_format_survives_503_and_redelivery(spark, fixture_server):
+    """df.write.format("caltopo") posts through the idempotent path:
+    two 503s are retried, every feature is recorded exactly once, and
+    a second identical save() (a re-run job, a task re-attempt) records
+    nothing new."""
+    url, state = fixture_server
+    register(spark)
+    from etl_caltopo_spark.caltopo.fixtures import fixture_envelope_df
+
+    out = run_pipeline(fixture_envelope_df(spark)).repartition(4)
+    expected = sorted(r["id"] for r in out.collect())
+    state["posts"] = []
+    state["seen_keys"] = set()
+    state["fail_next"] = 2
+
+    def save() -> list:
+        (
+            out.write.format("caltopo")
+            .option("url", f"{url}/api/v1/layer/WRITE/submit")
+            .mode("append")
+            .save()
+        )
+        return sorted(f["id"] for fc in state["posts"] for f in fc["features"])
+
+    assert save() == expected
+    assert state["fail_next"] == 0  # both 503s were served and retried
+    assert save() == expected
+
+
+def test_header_poster_times_out_on_a_silent_sink(monkeypatch):
+    """A sink that accepts the connection and never answers makes the
+    POST raise after ``HTTP_TIMEOUT_S`` instead of blocking forever, so
+    post_idempotent's bounded retries can run."""
+    import socket
+
+    from etl_caltopo_spark.caltopo import source
+
+    monkeypatch.setattr(source, "HTTP_TIMEOUT_S", 0.2)
+    silent = socket.create_server(("127.0.0.1", 0))  # listens, never accepts
+    url = f"http://127.0.0.1:{silent.getsockname()[1]}/submit"
+    errors = []
+
+    def call() -> None:
+        try:
+            _http_header_poster(url, "{}", {})
+        except OSError as exc:
+            errors.append(exc)
+
+    t = threading.Thread(target=call, daemon=True)
+    try:
+        t.start()
+        t.join(timeout=5)
+        assert not t.is_alive()
+    finally:
+        silent.close()
+    assert len(errors) == 1
