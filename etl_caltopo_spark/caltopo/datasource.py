@@ -6,10 +6,16 @@ Generalizes the reference's single-map scheduled fetch
 forms:
 
 - **batch**: ``spark.read.format("caltopo").option("shareIds",
-  "a,b,c")`` — one InputPartition per map, so the HTTP fetches run on
-  EXECUTORS in parallel.  A CloudTAK deployment with thousands of
-  layers becomes one scan with thousands of partitions instead of a
-  driver-side loop; Spark's scheduler owns retry/locality/backpressure.
+  "a,b,c")`` — the maps are packed into at most one InputPartition
+  per read slot (``defaultParallelism``, captured by :func:`register`),
+  the way Spark's file sources pack small files, so the HTTP fetches
+  run on EXECUTORS in parallel and each task pays one Python crossing
+  whatever its map count.  Inside a partition the GETs run a few at a
+  time (``source.fetch_all``).  A CloudTAK deployment with thousands
+  of layers becomes one scan instead of a driver-side loop; Spark's
+  scheduler owns retry/locality/backpressure.  The trade-off of
+  packing: a failed GET fails its task, and the re-attempt re-fetches
+  every map of that partition, not just the failed one.
 - **streaming**: ``spark.readStream.format("caltopo")`` — a
   SimpleDataSourceStreamReader whose offset is the envelope's server
   ``result.timestamp``; each micro-batch re-polls with the last
@@ -44,7 +50,7 @@ from pyspark.sql.datasource import (
 )
 
 from etl_caltopo_spark.caltopo.sink import post_rows, urllib_header_poster
-from etl_caltopo_spark.caltopo.source import BASE_URL, default_fetcher, map_state_url
+from etl_caltopo_spark.caltopo.source import BASE_URL, fetch_all, map_state_url
 
 SCHEMA = "share_id string, body_json string"
 
@@ -60,17 +66,28 @@ def _parse_options(options: dict) -> tuple[list[str], int, str]:
 
 
 class CalTopoBatchReader(DataSourceReader):
-    def __init__(self, options: dict) -> None:
+    def __init__(self, options: dict, slots: int | None = None) -> None:
         self.share_ids, self.since, self.base_url = _parse_options(options)
+        self.slots = slots
 
     def partitions(self) -> list[InputPartition]:
-        # one partition per map: fetch parallelism == map count, and a
-        # failed map retries alone instead of failing the whole scan
-        return [InputPartition(sid) for sid in self.share_ids]
+        """The share ids in ``min(#maps, slots)`` contiguous runs of
+        near-equal length, one partition each (one per map when no slot
+        count is known).  The split depends only on (shareIds, slots),
+        so a re-attempted task re-reads the same maps and its sink
+        chunk keeps its idempotency key.  A failed GET fails the whole
+        partition: its re-attempt re-fetches every map in it."""
+        n = len(self.share_ids)
+        k = min(n, self.slots or n)
+        return [
+            InputPartition(self.share_ids[i * n // k : (i + 1) * n // k])
+            for i in range(k)
+        ]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
-        sid = partition.value
-        yield (sid, default_fetcher(map_state_url(sid, self.since, self.base_url)))
+        sids = partition.value
+        urls = [map_state_url(sid, self.since, self.base_url) for sid in sids]
+        yield from zip(sids, fetch_all(urls))
 
 
 class CalTopoStreamReader(SimpleDataSourceStreamReader):
@@ -86,10 +103,11 @@ class CalTopoStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         since = dict(start["since"])
-        rows: list[tuple] = []
-        for sid in self.share_ids:
-            body = default_fetcher(map_state_url(sid, int(since[sid]), self.base_url))
-            rows.append((sid, body))
+        urls = [
+            map_state_url(sid, int(since[sid]), self.base_url) for sid in self.share_ids
+        ]
+        rows = list(zip(self.share_ids, fetch_all(urls)))
+        for sid, body in rows:
             try:
                 ts = json.loads(body).get("result", {}).get("timestamp")
                 if isinstance(ts, (int, float)):
@@ -137,6 +155,10 @@ class CalTopoWriter(DataSourceWriter):
 
 
 class CalTopoDataSource(DataSource):
+    #: read slots the batch reader packs maps into; None = one
+    #: partition per map
+    slots: int | None = None
+
     @classmethod
     def name(cls) -> str:
         return "caltopo"
@@ -145,7 +167,7 @@ class CalTopoDataSource(DataSource):
         return SCHEMA
 
     def reader(self, schema) -> CalTopoBatchReader:
-        return CalTopoBatchReader(self.options)
+        return CalTopoBatchReader(self.options, self.slots)
 
     def simpleStreamReader(self, schema) -> CalTopoStreamReader:
         return CalTopoStreamReader(self.options)
@@ -156,5 +178,17 @@ class CalTopoDataSource(DataSource):
 
 def register(spark) -> None:
     """Idempotent registration: after this, ``format("caltopo")``
-    resolves in both read and readStream."""
-    spark.dataSource.register(CalTopoDataSource)
+    resolves in both read and readStream, and batch reads pack their
+    maps into the session's ``defaultParallelism`` slots.  The slot
+    count rides on a class built here, which is pickled by value: a
+    class attribute set on :class:`CalTopoDataSource` itself would not
+    reach the Python worker that plans the read."""
+    try:
+        n_slots = spark.sparkContext.defaultParallelism
+    except Exception:  # e.g. Spark Connect: no SparkContext
+        n_slots = None
+
+    class CalTopoOnSlots(CalTopoDataSource):
+        slots = n_slots
+
+    spark.dataSource.register(CalTopoOnSlots)

@@ -4,21 +4,19 @@ The reference walks every coordinate position with turf's coordEach
 and truncates it to at most 3 elements (lon, lat, alt) — dropping
 CalTopo's 4th+ items (CHANGELOG.md:119-121).
 
-Spark-first design: GeoJSON nesting depth is FIXED per geometry type
-(Point=1 … MultiPolygon=4), so the six standard types compile to
-typed ``from_json`` + nested ``transform``/``slice`` — all codegen'd,
-no Python.  Only unknown/ragged types (GeometryCollection) fall back
-to an Arrow-batched pandas_udf walker, and only those rows pay for it.
+Spark-first design, with no Python anywhere: GeoJSON nesting depth is
+FIXED per geometry type (Point=1 … MultiPolygon=4), so the six
+standard types compile to typed ``from_json`` + nested
+``transform``/``slice`` — all codegen'd.  Unknown/ragged types
+(GeometryCollection) have no fixed depth, so their raw JSON text is
+cut with one ``regexp_replace`` (:func:`_ragged_pattern`), evaluated
+only for those rows.
 """
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 #: JSON schema (DDL) of the coordinates array per geometry type
 _DEPTH_SCHEMAS = {
@@ -58,24 +56,26 @@ def _truncate_typed(coords_json: Column, depth: int, keep: int) -> Column:
     return F.to_json(out)
 
 
-@F.pandas_udf(StringType())
-def _truncate_walker(coords_json: pd.Series) -> pd.Series:
-    """Fallback for non-standard geometry: recursive position walk
-    (the coordEach analog), Arrow-batched."""
+#: one JSON value Python's ``isinstance(x, (int, float))`` accepts
+#: after ``json.loads``: a number, a bool, or the NaN/Infinity tokens
+#: Spark's JSON reader allows
+_NUMBER = r"(?:-?(?:\d+(?:\.\d+)?(?:[eE][+-]?\d+)?|Infinity)|NaN|true|false)"
 
-    def walk(node):
-        if isinstance(node, list):
-            if node and all(isinstance(x, (int, float)) for x in node):
-                return node[:3]
-            return [walk(x) for x in node]
-        return node
 
-    def one(s):
-        if s is None:
-            return None
-        return json.dumps(walk(json.loads(s)), separators=(",", ":"))
-
-    return coords_json.map(one)
+def _ragged_pattern(keep: int) -> str:
+    """The coordEach cut on raw JSON text: matches a JSON string
+    literal (group 1), or an innermost all-number array with more than
+    ``keep`` elements — its ``[`` (group 2), first ``keep`` elements
+    (group 3) and ``]`` (group 4).  Replaced by ``$1$2$3$4``, a string
+    literal comes back unchanged (so ``"[1,2,3,4]"`` inside a string
+    is never cut) and every such array keeps its first ``keep``
+    elements, at any depth.  ``keep`` must be at least 1."""
+    sep = r"\s*,\s*"
+    head = sep.join([_NUMBER] * keep)
+    string = r'"[^"\\]*+(?:\\.[^"\\]*+)*+"'
+    # possessive loops (*+, ++) never backtrack, so Java matches them
+    # iteratively: a long array or string cannot overflow its stack
+    return rf"({string})|(\[)\s*({head})(?:{sep}{_NUMBER})++\s*(\])"
 
 
 def truncate_coordinates(
@@ -84,34 +84,19 @@ def truncate_coordinates(
     json_col: str = "geometry_json",
     keep: int = 3,
 ) -> DataFrame:
-    """Apply the <=3-element position truncation across all geometry
-    types; typed codegen paths for the standard six, UDF walker
-    otherwise.
-
-    Scale note: Spark HOISTS the pandas UDF out of the CASE into an
-    ArrowEvalPython node evaluated for EVERY row — conditional
-    branches do not short-circuit Python UDF evaluation.  So the
-    walker's INPUT is masked to NULL for the standard six types: the
-    Arrow batch ships a null column and the walker's per-row work for
-    standard rows is a single None check, keeping the whole-corpus
-    cost of the fallback proportional to the ragged rows only."""
+    """Apply the <=``keep``-element position truncation across all
+    geometry types; typed codegen paths for the standard six, the
+    :func:`_ragged_pattern` rewrite otherwise (a null geometry_type
+    with non-null coordinates included).  The CASE evaluates only the
+    branch a row takes, so standard rows never run the regex."""
     t = F.col(type_col)
     j = F.col(json_col)
-    standard = t.isin(
-        "Point", "MultiPoint", "LineString", "MultiLineString", "Polygon",
-        "MultiPolygon",
-    )
-    # null geometry_type with non-null coordinates still walks
-    # (coalesce: NULL type is "not standard", not "skip")
-    walker_input = F.when(
-        ~F.coalesce(standard, F.lit(False)) & j.isNotNull(), j
-    )
     expr = (
         F.when(j.isNull(), F.lit(None).cast("string"))
         .when(t == "Point", _truncate_typed(j, 1, keep))
         .when((t == "MultiPoint") | (t == "LineString"), _truncate_typed(j, 2, keep))
         .when((t == "MultiLineString") | (t == "Polygon"), _truncate_typed(j, 3, keep))
         .when(t == "MultiPolygon", _truncate_typed(j, 4, keep))
-        .otherwise(_truncate_walker(walker_input))
+        .otherwise(F.regexp_replace(j, _ragged_pattern(keep), "$1$2$3$4"))
     )
     return df.withColumn(json_col, expr)

@@ -3,9 +3,10 @@
 The reference builds ``/api/v1/map/{ShareId}/since/{-500}`` and GETs
 it once per scheduled invocation.  Here:
 
-- the fetch itself is driver-side and injectable (tests pass a fake
-  fetcher; production passes urllib/requests) — one small envelope
-  per map, exactly like the reference;
+- the fetch itself is injectable (tests pass a fake fetcher;
+  production passes urllib/requests) — one small envelope per map,
+  exactly like the reference.  Every reader GETs its maps through
+  :func:`fetch_all`, a few at a time;
 - incremental state generalizes the server-side ``since`` window:
   a high-watermark (max ``updated``) persisted between batch runs
   (SURVEY §4.2 — Spark batch is stateless, the watermark file is the
@@ -17,6 +18,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +32,9 @@ BASE_URL = "https://caltopo.com"
 #: seconds an HTTP call waits for the server, for the map GETs and the
 #: sink POSTs alike; read at call time
 HTTP_TIMEOUT_S = 30.0
+
+#: map GETs one reader keeps in flight at once
+FETCH_CONCURRENCY = 4
 
 
 def validate_env(env: dict) -> dict:
@@ -59,6 +64,18 @@ def default_fetcher(url: str) -> str:
         return resp.read().decode("utf-8")
 
 
+def fetch_all(urls: list[str], fetcher: Fetcher | None = None) -> list[str]:
+    """GET every url, at most :data:`FETCH_CONCURRENCY` at a time, and
+    return the bodies in url order.  The first failed GET raises.  The
+    one fetch loop of the batch source's partitions, the stream
+    source's micro-batches and :func:`fetch_envelopes`."""
+    fetcher = fetcher or default_fetcher
+    if len(urls) <= 1:
+        return [fetcher(u) for u in urls]
+    with ThreadPoolExecutor(min(FETCH_CONCURRENCY, len(urls))) as pool:
+        return list(pool.map(fetcher, urls))
+
+
 def fetch_envelopes(
     spark: SparkSession,
     share_ids: list[str],
@@ -68,9 +85,10 @@ def fetch_envelopes(
     """GET each map's state and wrap the raw bodies as a DataFrame
     (``share_id``, ``body_json``).  One row per map: the fan-out
     across thousands of maps is rows, not driver loops downstream."""
-    fetcher = fetcher or default_fetcher
-    rows = [(sid, fetcher(map_state_url(sid, since))) for sid in share_ids]
-    return spark.createDataFrame(rows, "share_id string, body_json string")
+    bodies = fetch_all([map_state_url(sid, since) for sid in share_ids], fetcher)
+    return spark.createDataFrame(
+        list(zip(share_ids, bodies)), "share_id string, body_json string"
+    )
 
 
 def envelopes_from_jsonl(spark: SparkSession, path: str) -> DataFrame:

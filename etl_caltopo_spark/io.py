@@ -89,11 +89,13 @@ def parquet_ts_bounds(sf_dir: str, name: str, col: str):
 
     Returns ``None`` whenever the footer cannot PROVE the bounds, and
     the caller falls back to the Spark aggregate: non-local or missing
-    path, any part file without trusted stats, a logical type other
-    than timestamp[us] NTZ (the nanosAsLong / LTZ fallback branches of
-    :func:`load_table` rewrite the column, so only the natively-read
-    µs NTZ case is footer-equal), or a row group holding non-null
-    values without min/max.  Returns ``(None, None)`` when the footer
+    path, a table directory holding any subdirectory, a footer or
+    statistic that does not decode, any part file without trusted
+    stats, a logical type other than timestamp[us] NTZ (the
+    nanosAsLong / LTZ fallback branches of :func:`load_table` rewrite
+    the column, so only the natively-read µs NTZ case is
+    footer-equal), or a row group holding non-null values without
+    min/max.  Returns ``(None, None)`` when the footer
     proves the column is empty/all-NULL — exactly the aggregate's NULL
     min/max.  Value-identity with the aggregate is pinned in
     tests/test_r15_optimizations.py across scales and replica shapes
@@ -104,6 +106,10 @@ def parquet_ts_bounds(sf_dir: str, name: str, col: str):
 
     path = os.path.join(sf_dir, f"{name}.parquet")
     if os.path.isdir(path):
+        # flat layouts only: a partitioned table keeps part files in
+        # subdirectories the glob below would not see
+        if any(e.is_dir() for e in os.scandir(path)):
+            return None
         files = sorted(glob.glob(os.path.join(path, "*.parquet")))
         if not files:
             return None
@@ -112,16 +118,22 @@ def parquet_ts_bounds(sf_dir: str, name: str, col: str):
     else:
         return None
     try:
-        import pyarrow.parquet as pq
-    except ImportError:  # pragma: no cover - pyarrow ships with pyspark
+        return _footer_ts_bounds(files, col)
+    except Exception:
+        # no pyarrow, an unreadable footer, or stats that do not decode
+        # (e.g. a timestamp outside datetime's range): the aggregate
+        # answers
         return None
+
+
+def _footer_ts_bounds(files: list[str], col: str):
+    """:func:`parquet_ts_bounds` over the given part files; may raise."""
+    import pyarrow.parquet as pq
+
     lo = hi = None
     saw_value = False
     for f in files:
-        try:
-            md = pq.ParquetFile(f).metadata
-        except Exception:
-            return None
+        md = pq.ParquetFile(f).metadata
         sch = md.schema
         idx = next(
             (j for j in range(md.num_columns) if sch.column(j).path == col),

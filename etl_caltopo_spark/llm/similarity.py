@@ -630,8 +630,8 @@ def exact_knn_candidates(
     def _fround6(x):
         """numpy mirror of functions.numeric.fround(col, 6) on a double
         array: |x·1e6| ≥ 2^63 passes through the (x·1e6)/1e6 round-trip;
-        otherwise Spark's LONG floor — NaN → 0, -0.0 → +0.0 (the ``+
-        0.0``), then /1e6.  Bit-equal to the expression on every input
+        otherwise Spark's LONG floor — -0.0 → +0.0 (the ``+ 0.0``),
+        then /1e6.  Bit-equal to the expression on every input
         class (pinned in tests/test_r15_optimizations.py)."""
         scaled = x * 1e6
         big = np.abs(scaled) >= 9.223372036854776e18  # False on NaN

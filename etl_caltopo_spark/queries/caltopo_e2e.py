@@ -232,7 +232,7 @@ def q_caltopo_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # null-guarded: F.size(NULL) is -1 under non-ANSI defaults while
         # the oracle's json_array_length(NULL) is NULL — matters the day
         # the fixture envelope gains a geometry type outside the pos0
-        # CASE (e.g. GeometryCollection via the walker fallback)
+        # CASE (e.g. GeometryCollection via the ragged-tree rewrite)
         F.when(F.col("_pos0").isNotNull(), F.size("_pos0"))
         .cast("int")
         .alias("pos_dims"),

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from types import SimpleNamespace
 
 import pytest
 
@@ -18,18 +19,21 @@ from etl_caltopo_spark.caltopo.pipeline import run_pipeline
 def fixture_server():
     """Serves the fixture envelope at /api/v1/map/<id>/since/<n>,
     echoing the requested since value into result.timestamp + 1000 so
-    the stream reader has an advancing offset.  Counts requests."""
+    the stream reader has an advancing offset, and the map id into
+    every feature's description, so no two maps post the same chunk.
+    Counts requests."""
     state = {"requests": []}
-    envelope = json.loads(fixture_envelope_json())
+    envelope = fixture_envelope_json()
 
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):
             state["requests"].append(self.path)
             parts = self.path.strip("/").split("/")
             since = int(parts[-1])
-            body = dict(envelope)
-            body["result"] = dict(envelope["result"])
+            body = json.loads(envelope)
             body["result"]["timestamp"] = max(since, 0) + 1000
+            for feature in body["result"]["state"]["features"]:
+                feature["properties"]["description"] = parts[-3]
             data = json.dumps(body).encode()
             self.send_response(200)
             self.send_header("Content-Type", "application/json")
@@ -83,10 +87,101 @@ def test_batch_read_one_partition_per_map(spark, fixture_server):
         .option("baseUrl", url)
         .load()
     )
-    assert df.rdd.getNumPartitions() == 3  # fetch parallelism == map count
+    # one partition per map, up to one per read slot
+    assert df.rdd.getNumPartitions() == min(3, spark.sparkContext.defaultParallelism)
     rows = {r["share_id"]: r["body_json"] for r in df.collect()}
     assert set(rows) == {"MAP-A", "MAP-B", "MAP-C"}
     assert all(json.loads(b)["status"] == "ok" for b in rows.values())
+
+
+def test_partitions_depend_only_on_share_ids_and_slots():
+    """Contiguous, near-equal runs of the share ids in their given
+    order, one per slot; one partition per map when no slot count is
+    known."""
+    from etl_caltopo_spark.caltopo.datasource import CalTopoBatchReader
+
+    opts = {"shareids": "a,b,c,d,e"}
+
+    def split(slots):
+        return [p.value for p in CalTopoBatchReader(opts, slots).partitions()]
+
+    assert split(2) == [["a", "b"], ["c", "d", "e"]]
+    assert split(8) == split(None) == [["a"], ["b"], ["c"], ["d"], ["e"]]
+
+
+def test_register_without_a_spark_context_reads_one_partition_per_map():
+    """A session with no SparkContext (e.g. Spark Connect) gives no slot
+    count, so the registered source keeps one partition per map."""
+    registered = []
+
+    class ContextlessSession:
+        dataSource = SimpleNamespace(register=registered.append)
+
+        @property
+        def sparkContext(self):
+            raise NotImplementedError("no SparkContext")
+
+    register(ContextlessSession())
+    (source,) = registered
+    reader = source({"shareids": "a,b,c"}).reader(None)
+    assert [p.value for p in reader.partitions()] == [["a"], ["b"], ["c"]]
+
+
+def test_batch_read_packs_maps_into_read_slots(spark, fixture_server):
+    """More maps than read slots: one partition per slot, each map one
+    row from one GET, the same rows as the one-partition-per-map read,
+    and every feature delivered exactly once by both submit paths."""
+    from etl_caltopo_spark.caltopo.datasource import CalTopoDataSource
+    from etl_caltopo_spark.caltopo.sink import submit_idempotent
+
+    url, state = fixture_server
+    slots = spark.sparkContext.defaultParallelism
+    maps = [f"PACK-{i:02d}" for i in range(2 * slots + 1)]
+
+    def read():
+        return (
+            spark.read.format("caltopo")
+            .option("shareIds", ",".join(maps))
+            .option("baseUrl", url)
+            .load()
+        )
+
+    spark.dataSource.register(CalTopoDataSource)  # no slot count: one per map
+    try:
+        per_map = read()
+        assert per_map.rdd.getNumPartitions() == len(maps)
+        per_map_rows = per_map.collect()
+    finally:
+        register(spark)
+
+    packed = read()
+    assert packed.rdd.getNumPartitions() == slots
+    state["requests"].clear()
+    rows = packed.collect()
+    assert [r["share_id"] for r in rows] == maps
+    assert sorted(p.strip("/").split("/")[-3] for p in state["requests"]) == maps
+    assert rows == per_map_rows
+
+    out = run_pipeline(packed)
+    expected = sorted((r["id"], r["remarks"]) for r in out.collect())
+    assert len(expected) == 14 * len(maps)
+    for driver_collect_max in (10_000, 0):
+        state["posts"] = []
+        state["seen_keys"] = set()
+        n = submit_idempotent(
+            out,
+            f"{url}/api/v1/layer/PACK/submit",
+            _http_header_poster,
+            driver_collect_max=driver_collect_max,
+            backoff_s=0.001,
+        )
+        assert n == len(expected)
+        posted = sorted(
+            (f["id"], f["properties"]["remarks"])
+            for fc in state["posts"]
+            for f in fc["features"]
+        )
+        assert posted == expected
 
 
 def test_batch_read_feeds_pipeline(spark, fixture_server):

@@ -87,11 +87,10 @@ def test_topk_uses_heap_not_global_sort(spark, sf_dir):
 
 
 def test_no_row_python_in_declared_queries(spark, sf_dir):
-    """Python appears in exactly two declared queries (the simhash
-    pandas UDF, and the caltopo pipeline's ragged-geometry walker
-    fallback branch — present in the plan, never taken for standard
-    types) and only ever Arrow-batched — never row-at-a-time."""
-    arrow_ok = {"q_dedup_simhash", "q_caltopo_pipeline"}
+    """Python evaluation appears in exactly one declared query (the
+    simhash pandas UDF), and only Arrow-batched — never
+    row-at-a-time."""
+    arrow_ok = {"q_dedup_simhash"}
     for name, spec in REGISTRY.items():
         plan = plan_of(spec.fn(spark, sf_dir))
         assert "BatchEvalPython" not in plan, f"{name} uses row-at-a-time Python"
@@ -213,11 +212,12 @@ def test_whole_stage_codegen_covers_transform(spark, sf_dir):
     assert "*(1)" in plan
 
 
-def test_caltopo_pipeline_geometry_udf_only_for_ragged(spark):
-    """The caltopo transform keeps the six standard geometry types in
-    codegen; the walker UDF appears in the plan (for the fallback
-    branch) but only as an Arrow-batched evaluation."""
+def test_caltopo_pipeline_has_no_python(spark):
+    """The caltopo transform runs in the JVM end to end: the six
+    standard geometry types in codegen, ragged ones through a regex
+    rewrite, so the plan has no Python evaluation node."""
     plan = plan_of(run_pipeline(fixture_envelope_df(spark)))
+    assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
 
 

@@ -196,6 +196,42 @@ def test_parquet_ts_bounds_refuses_unprovable():
     ) is None
 
 
+def test_parquet_ts_bounds_refuses_undecodable_stats(tmp_path):
+    """A µs NTZ value past datetime's range makes pyarrow's stats
+    decoding raise OverflowError: the bounds fall back (None) instead
+    of failing the query."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_caltopo_spark.io import parquet_ts_bounds
+
+    os.makedirs(tmp_path / "events.parquet")
+    far = pa.array([2**62], type=pa.timestamp("us"))  # ~year 148,000
+    pq.write_table(pa.table({"ts": far}), tmp_path / "events.parquet" / "part-0.parquet")
+    assert parquet_ts_bounds(str(tmp_path), "events", "ts") is None
+
+
+def test_parquet_ts_bounds_refuses_nested_layout(tmp_path):
+    """A table directory with any subdirectory (e.g. partition
+    directories) is not a flat layout the footer glob can prove: it
+    falls back, even though the top-level part file alone would give
+    bounds."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_caltopo_spark.io import parquet_ts_bounds
+
+    table = tmp_path / "events.parquet"
+    os.makedirs(table)
+    ts = pa.array([datetime.datetime(2024, 1, 1)], type=pa.timestamp("us"))
+    pq.write_table(pa.table({"ts": ts}), table / "part-0.parquet")
+    assert parquet_ts_bounds(str(tmp_path), "events", "ts") is not None
+    os.makedirs(table / "day=2")
+    assert parquet_ts_bounds(str(tmp_path), "events", "ts") is None
+
+
 # ---------------------------------------------------------------------------
 # 5. column-wise sequential norm fold (guide §4.2): the per-block
 #    pandas helpers replaced their O(n·d) per-row Python norm loop
