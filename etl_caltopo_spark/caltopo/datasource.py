@@ -10,12 +10,14 @@ forms:
   per read slot (``defaultParallelism``, captured by :func:`register`),
   the way Spark's file sources pack small files, so the HTTP fetches
   run on EXECUTORS in parallel and each task pays one Python crossing
-  whatever its map count.  Inside a partition the GETs run a few at a
-  time (``source.fetch_all``).  A CloudTAK deployment with thousands
-  of layers becomes one scan instead of a driver-side loop; Spark's
-  scheduler owns retry/locality/backpressure.  The trade-off of
-  packing: a failed GET fails its task, and the re-attempt re-fetches
-  every map of that partition, not just the failed one.
+  whatever its map count.  Inside a partition the GETs run one after
+  another (``source.fetch_all``).  A CloudTAK deployment with
+  thousands of layers becomes one scan instead of a driver-side loop;
+  Spark's scheduler owns retry/locality/backpressure.  The trade-off
+  of packing: a failed GET fails its task, and the re-attempt
+  re-fetches every map of that partition, not just the failed one.
+  The sink still posts one chunk per map (``sink.post_per_map``), so
+  packing changes neither a POST's size nor its idempotency key.
 - **streaming**: ``spark.readStream.format("caltopo")`` — a
   SimpleDataSourceStreamReader whose offset is the envelope's server
   ``result.timestamp``; each micro-batch re-polls with the last
@@ -49,7 +51,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from etl_caltopo_spark.caltopo.sink import post_rows, urllib_header_poster
+from etl_caltopo_spark.caltopo.sink import post_per_map, urllib_header_poster
 from etl_caltopo_spark.caltopo.source import BASE_URL, fetch_all, map_state_url
 
 SCHEMA = "share_id string, body_json string"
@@ -125,8 +127,8 @@ class _PostedChunk(WriterCommitMessage):
 class CalTopoWriter(DataSourceWriter):
     """Executor-side FeatureCollection POST as a native write format
     (R16, ``task.ts:154-159``): ``df.write.format("caltopo")
-    .option("url", ...).mode("append").save()`` posts each non-empty
-    partition as one chunk through ``sink.post_rows``, the path
+    .option("url", ...).mode("append").save()`` posts each partition
+    one chunk per map through ``sink.post_per_map``, the path
     ``sink.submit_idempotent`` takes above its collect threshold, so
     every chunk carries its idempotency key and retries a 503.  The
     write is wired into Spark's commit protocol (a failed partition
@@ -141,10 +143,9 @@ class CalTopoWriter(DataSourceWriter):
             raise ValueError("caltopo writer requires option url=<submit endpoint>")
 
     def write(self, iterator) -> _PostedChunk:
-        rows = list(iterator)
-        if not rows:
-            return _PostedChunk()
-        return _PostedChunk(n_features=post_rows(rows, self.url, urllib_header_poster))
+        return _PostedChunk(
+            n_features=post_per_map(iterator, self.url, urllib_header_poster)
+        )
 
     def commit(self, messages) -> None:
         # nothing to finalize server-side; counts surface for logging

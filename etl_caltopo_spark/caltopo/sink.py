@@ -8,10 +8,10 @@ canonical FeatureCollection (features sorted by id) sent through
 times.  :func:`submit_idempotent` is the entry point and dispatches on
 output size: at reference scale (a map layer is O(10^2..10^4)
 features) it mirrors the Lambda's single driver-side POST; beyond
-``DRIVER_COLLECT_MAX`` features each partition POSTs its own chunk, so
-nothing large is ever collected to the driver.  The ``caltopo`` write
-format (``datasource.CalTopoWriter``) posts each partition the same
-way.
+``DRIVER_COLLECT_MAX`` features each partition POSTs one chunk per
+map (:func:`post_per_map`), so nothing large is ever collected to the
+driver.  The ``caltopo`` write format (``datasource.CalTopoWriter``)
+posts each partition the same way.
 """
 
 from __future__ import annotations
@@ -95,6 +95,21 @@ def post_rows(rows: Iterable, url: str, poster: HeaderPoster, **retry) -> int:
     fc = to_feature_collection(rows)
     post_idempotent(poster, url, json.dumps(fc), **retry)
     return len(fc["features"])
+
+
+def post_per_map(rows: Iterable, url: str, poster: HeaderPoster, **retry) -> int:
+    """POST one partition's rows through :func:`post_rows`, one chunk
+    per map (``share_id``; rows without that field are one chunk).  A
+    chunk then holds exactly its map's features however many maps the
+    read packed into the partition: its size is one map's, a 503
+    re-sends one map, and its idempotency key does not depend on the
+    cluster's slot count, so a re-run on a resized cluster re-posts
+    each map under the key it had.  Returns the feature count."""
+    chunks: dict = {}
+    for row in rows:
+        sid = row["share_id"] if "share_id" in row.__fields__ else None
+        chunks.setdefault(sid, []).append(row)
+    return sum(post_rows(chunk, url, poster, **retry) for chunk in chunks.values())
 
 
 def urllib_header_poster(url: str, body: str, headers: dict) -> None:
@@ -191,21 +206,21 @@ def submit_idempotent(
     """The sink (R16, task.ts:154-159).  The feature count decides the
     path: at-or-below ``driver_collect_max`` features, a single
     driver-side POST (reference-faithful — the Lambda also submits the
-    whole collection at once); above it, each partition POSTs its own
-    chunk so the payload never materializes on the driver.  Every POST
-    goes through :func:`post_rows`.  The frame is persisted around the
+    whole collection at once); above it, each partition POSTs one
+    chunk per map (:func:`post_per_map`) so the payload never
+    materializes on the driver.  Every POST goes through
+    :func:`post_rows`.  The frame is persisted around the
     count, so the count and the POSTs read the source once: without
     the cache the POSTs would re-fetch and re-decode every map.  A
     frame the caller already persisted is left as it is.  Determinism
     of the feeding plan is the caller's contract: an upstream that
-    changes partition membership between task attempts changes chunk
-    contents, and so their keys.  Returns the feature count."""
+    splits a map's rows across partitions differently between task
+    attempts changes chunk contents, and so their keys.  Returns the
+    feature count."""
     retry = {"max_retries": max_retries, "backoff_s": backoff_s}
 
     def post_partition(rows) -> None:
-        rows = list(rows)
-        if rows:
-            post_rows(rows, url, poster, **retry)
+        post_per_map(rows, url, poster, **retry)
 
     owned = df.storageLevel == StorageLevel.NONE
     if owned:

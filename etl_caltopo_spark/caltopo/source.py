@@ -6,7 +6,7 @@ it once per scheduled invocation.  Here:
 - the fetch itself is injectable (tests pass a fake fetcher;
   production passes urllib/requests) — one small envelope per map,
   exactly like the reference.  Every reader GETs its maps through
-  :func:`fetch_all`, a few at a time;
+  :func:`fetch_all`, one after another;
 - incremental state generalizes the server-side ``since`` window:
   a high-watermark (max ``updated``) persisted between batch runs
   (SURVEY §4.2 — Spark batch is stateless, the watermark file is the
@@ -18,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,9 +31,6 @@ BASE_URL = "https://caltopo.com"
 #: seconds an HTTP call waits for the server, for the map GETs and the
 #: sink POSTs alike; read at call time
 HTTP_TIMEOUT_S = 30.0
-
-#: map GETs one reader keeps in flight at once
-FETCH_CONCURRENCY = 4
 
 
 def validate_env(env: dict) -> dict:
@@ -65,15 +61,11 @@ def default_fetcher(url: str) -> str:
 
 
 def fetch_all(urls: list[str], fetcher: Fetcher | None = None) -> list[str]:
-    """GET every url, at most :data:`FETCH_CONCURRENCY` at a time, and
-    return the bodies in url order.  The first failed GET raises.  The
-    one fetch loop of the batch source's partitions, the stream
-    source's micro-batches and :func:`fetch_envelopes`."""
+    """GET every url in order and return the bodies; the first failed
+    GET raises.  The one fetch loop of the batch source's partitions,
+    the stream source's micro-batches and :func:`fetch_envelopes`."""
     fetcher = fetcher or default_fetcher
-    if len(urls) <= 1:
-        return [fetcher(u) for u in urls]
-    with ThreadPoolExecutor(min(FETCH_CONCURRENCY, len(urls))) as pool:
-        return list(pool.map(fetcher, urls))
+    return [fetcher(u) for u in urls]
 
 
 def fetch_envelopes(

@@ -130,7 +130,10 @@ def test_register_without_a_spark_context_reads_one_partition_per_map():
 def test_batch_read_packs_maps_into_read_slots(spark, fixture_server):
     """More maps than read slots: one partition per slot, each map one
     row from one GET, the same rows as the one-partition-per-map read,
-    and every feature delivered exactly once by both submit paths."""
+    and every feature delivered exactly once by both submit paths.  The
+    per-partition path posts one chunk per map, under the same keys as
+    from the one-partition-per-map read: chunk keys do not depend on
+    the slot count."""
     from etl_caltopo_spark.caltopo.datasource import CalTopoDataSource
     from etl_caltopo_spark.caltopo.sink import submit_idempotent
 
@@ -146,13 +149,32 @@ def test_batch_read_packs_maps_into_read_slots(spark, fixture_server):
             .load()
         )
 
+    def submit(frame, driver_collect_max):
+        state["posts"] = []
+        state["seen_keys"] = set()
+        n = submit_idempotent(
+            run_pipeline(frame),
+            f"{url}/api/v1/layer/PACK/submit",
+            _http_header_poster,
+            driver_collect_max=driver_collect_max,
+            backoff_s=0.001,
+        )
+        posted = sorted(
+            (f["id"], f["properties"]["remarks"])
+            for fc in state["posts"]
+            for f in fc["features"]
+        )
+        return n, posted, set(state["seen_keys"])
+
     spark.dataSource.register(CalTopoDataSource)  # no slot count: one per map
     try:
         per_map = read()
         assert per_map.rdd.getNumPartitions() == len(maps)
         per_map_rows = per_map.collect()
+        _, _, per_map_keys = submit(per_map, 0)
     finally:
         register(spark)
+    assert len(per_map_keys) == len(maps)
 
     packed = read()
     assert packed.rdd.getNumPartitions() == slots
@@ -162,26 +184,13 @@ def test_batch_read_packs_maps_into_read_slots(spark, fixture_server):
     assert sorted(p.strip("/").split("/")[-3] for p in state["requests"]) == maps
     assert rows == per_map_rows
 
-    out = run_pipeline(packed)
-    expected = sorted((r["id"], r["remarks"]) for r in out.collect())
+    expected = sorted((r["id"], r["remarks"]) for r in run_pipeline(packed).collect())
     assert len(expected) == 14 * len(maps)
     for driver_collect_max in (10_000, 0):
-        state["posts"] = []
-        state["seen_keys"] = set()
-        n = submit_idempotent(
-            out,
-            f"{url}/api/v1/layer/PACK/submit",
-            _http_header_poster,
-            driver_collect_max=driver_collect_max,
-            backoff_s=0.001,
-        )
+        n, posted, keys = submit(packed, driver_collect_max)
         assert n == len(expected)
-        posted = sorted(
-            (f["id"], f["properties"]["remarks"])
-            for fc in state["posts"]
-            for f in fc["features"]
-        )
         assert posted == expected
+    assert keys == per_map_keys
 
 
 def test_batch_read_feeds_pipeline(spark, fixture_server):
