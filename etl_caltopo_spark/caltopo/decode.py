@@ -5,8 +5,8 @@ the reference's ``res.typed(schema)``: FAILFAST mode throws on
 mismatch (task.ts throws), PERMISSIVE degrades to nulls.  The ragged
 ``geometry.coordinates`` subtree (Type.Any(), task.ts:81) is captured
 as raw JSON text by declaring it StringType — Spark's JSON parser
-re-serializes non-string tokens, so no information is lost and the
-typed re-parse happens only in the geometry operators.
+re-serializes non-string tokens, so no information is lost; the
+geometry operator cuts that text without parsing it.
 
 Then the nested-field drill + explode (task.ts:92): one row per
 feature, properties flattened to the FIXTURES.md A.2 working schema,

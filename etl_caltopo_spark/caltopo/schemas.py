@@ -7,8 +7,8 @@ throw-on-mismatch; PERMISSIVE = lenient mode).
 
 Geometry is ``Type.Any()`` in the reference (task.ts:81) — Spark needs
 fixed shapes, so geometry is carried as ``geometry_type`` (string) +
-``geometry_json`` (raw coordinates JSON), with typed re-parses at the
-operators that need structure (SURVEY §7.4).
+``geometry_json`` (raw coordinates JSON), cut as text by the geometry
+operator and parsed by the sink (SURVEY §7.4).
 """
 
 from __future__ import annotations
@@ -104,29 +104,3 @@ ENVELOPE_SCHEMA = StructType(
         ),
     ]
 )
-
-#: flat working table (FIXTURES.md A.2) — one row per feature
-FEATURES_FLAT_COLUMNS = [
-    "id",
-    "class",
-    "title",
-    "description",
-    "creator",
-    "updated",
-    "marker_symbol",
-    "marker_rotation",
-    "marker_color",
-    "marker_size",
-    "stroke",
-    "stroke_opacity",
-    "stroke_width",
-    "pattern",
-    "fill",
-    "fill_opacity",
-    "folder_id",
-    "visible",
-    "label_visible",
-    "icon",
-    "geometry_type",
-    "geometry_json",
-]

@@ -110,20 +110,12 @@ def to_input_features(features: DataFrame) -> DataFrame:
             "marker_color"
         ),
         F.when(has_marker, F.lit(1.0)).alias("marker_opacity"),
-        F.when(F.col("fill").isNotNull(), F.col("fill").cast("string")).alias("fill"),
-        F.when(
-            F.col("fill_opacity").isNotNull(), F.col("fill_opacity").cast("double")
-        ).alias("fill_opacity"),
-        F.when(F.col("stroke").isNotNull(), F.col("stroke").cast("string")).alias(
-            "stroke"
-        ),
-        F.when(
-            F.col("stroke_opacity").isNotNull(), F.col("stroke_opacity").cast("double")
-        ).alias("stroke_opacity"),
-        F.when(
-            F.col("stroke_width").isNotNull(), F.col("stroke_width").cast("double")
-        ).alias("stroke_width"),
-        F.when(F.col("icon").isNotNull(), F.col("icon").cast("string")).alias("icon"),
+        F.col("fill").cast("string").alias("fill"),
+        F.col("fill_opacity").cast("double").alias("fill_opacity"),
+        F.col("stroke").cast("string").alias("stroke"),
+        F.col("stroke_opacity").cast("double").alias("stroke_opacity"),
+        F.col("stroke_width").cast("double").alias("stroke_width"),
+        F.col("icon").cast("string").alias("icon"),
         metadata.alias("metadata"),
         "folder_id",
         "geometry_type",

@@ -320,3 +320,31 @@ def test_submit_releases_only_its_own_cache(spark):
     assert submit_idempotent(cached, "https://example.test/layer", poster) == 14
     assert cached.storageLevel != StorageLevel.NONE
     cached.unpersist()
+
+
+@pytest.mark.parametrize(
+    "coords, posted",
+    [
+        ([[1, 2, 3, 4]], [[1, 2, 3]]),  # deeper than a Point's depth
+        ([True, 1, 2, 3], [True, 1, 2]),  # a bool where a number belongs
+        ([1, 2, 3, 4], [1, 2, 3]),  # integers keep their text
+    ],
+)
+def test_sink_posts_coordinates_off_the_declared_depth(spark, coords, posted):
+    """A Point whose coordinates do not parse at its depth is cut like
+    any other tree and posted, as the reference's coordEach splice
+    leaves it: it is neither nulled nor re-printed as doubles."""
+    from etl_caltopo_spark.caltopo.sink import submit_idempotent
+
+    body = _envelope([
+        _feature("p", "Marker", "p", {"type": "Point", "coordinates": coords})
+    ])
+    df = spark.createDataFrame([("S", body)], "share_id string, body_json string")
+    bodies = []
+
+    def poster(url: str, body: str, headers: dict) -> None:
+        bodies.append(body)
+
+    assert submit_idempotent(run_pipeline(df), "https://example.test/layer", poster) == 1
+    [feature] = json.loads(bodies[0])["features"]
+    assert json.dumps(feature["geometry"]["coordinates"]) == json.dumps(posted)

@@ -1,5 +1,6 @@
-"""Geometry truncation: typed paths, the ragged-tree regex rewrite,
-and the Q4 invariant property-tested with hypothesis."""
+"""Geometry truncation: one regex rewrite for every geometry type,
+and the Q4 invariant property-tested with hypothesis against a
+coordEach walker."""
 
 from __future__ import annotations
 
@@ -90,29 +91,47 @@ _ragged = st.recursive(
 )
 
 
-def _envelope(coords_json: str) -> str:
+#: every geometry type the rewrite sees: the six standard ones,
+#: GeometryCollection and a null type
+_types = st.sampled_from(
+    [
+        "Point",
+        "MultiPoint",
+        "LineString",
+        "MultiLineString",
+        "Polygon",
+        "MultiPolygon",
+        "GeometryCollection",
+        None,
+    ]
+)
+
+
+def _envelope(geometry_type: str | None, coords_json: str) -> str:
     return (
         '{"status":"ok","timestamp":1,"result":{"timestamp":1,"state":'
         '{"type":"FeatureCollection","features":[{"id":"g","type":"Feature",'
         '"properties":{"class":"Shape","title":"t"},"geometry":'
-        '{"type":"GeometryCollection","coordinates":' + coords_json + "}}]}}}"
+        '{"type":' + json.dumps(geometry_type) + ',"coordinates":' + coords_json
+        + "}}]}}}"
     )
 
 
 @settings(max_examples=25, deadline=None)
-@given(st.lists(_ragged, min_size=1, max_size=8), st.booleans())
+@given(st.lists(st.tuples(_types, _ragged), min_size=1, max_size=8), st.booleans())
 def test_ragged_truncation_matches_walker(spark, trees, indent):
-    """∀ ragged GeometryCollection tree, as given (with or without
+    """∀ geometry type and ragged coordinate tree, whether or not the
+    tree conforms to the type's depth, as given (with or without
     whitespace) and after decode_envelope's raw-JSON capture: the
     output parses to the walker oracle applied to the input."""
     given_rows = [
-        ("GeometryCollection", json.dumps(t, indent=1 if indent else None)) for t in trees
+        (gtype, json.dumps(t, indent=1 if indent else None)) for gtype, t in trees
     ]
     for (_, inp), row in zip(given_rows, _run(spark, given_rows)):
         assert json.loads(row["geometry_json"]) == walk(json.loads(inp))
 
     envelopes = spark.createDataFrame(
-        [(f"m{i}", _envelope(inp)) for i, (_, inp) in enumerate(given_rows)],
+        [(f"m{i}", _envelope(*row)) for i, row in enumerate(given_rows)],
         "share_id string, body_json string",
     )
     decoded = decode_envelope(envelopes).select(

@@ -213,9 +213,9 @@ def test_whole_stage_codegen_covers_transform(spark, sf_dir):
 
 
 def test_caltopo_pipeline_has_no_python(spark):
-    """The caltopo transform runs in the JVM end to end: the six
-    standard geometry types in codegen, ragged ones through a regex
-    rewrite, so the plan has no Python evaluation node."""
+    """The caltopo transform runs in the JVM end to end: every
+    geometry type is cut by one regex rewrite, so the plan has no
+    Python evaluation node."""
     plan = plan_of(run_pipeline(fixture_envelope_df(spark)))
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
