@@ -12,14 +12,63 @@ Then the nested-field drill + explode (task.ts:92): one row per
 feature, properties flattened to the FIXTURES.md A.2 working schema,
 plus ``folder_title``: the title of the feature's folder, looked up in
 a folder map built from the same envelope (task.ts:90,142-152).
+
+Each projection and filter after ``from_json`` is one
+``selectExpr``/``filter`` over SQL expression text, parsed and
+analysed in the JVM.  Built from ``pyspark.sql.functions`` Columns
+instead, every ``F.col``/``F.lit``/lambda costs several py4j round
+trips (PySpark's ``_with_origin`` call-site capture), and the chain
+from decode to transform took ~2,600 of them, ~0.5-0.9 s per build,
+on every submit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_caltopo_spark.caltopo.schemas import ENVELOPE_SCHEMA
+
+#: working column <- source property; a property absent from the
+#: envelope is null (quirk Q3)
+_PROPERTY_COLUMNS = {
+    "class": "class",
+    "title": "title",
+    "description": "description",
+    "creator": "creator",
+    "updated": "updated",
+    "marker_symbol": "marker-symbol",
+    "marker_rotation": "marker-rotation",
+    "marker_color": "marker-color",
+    "marker_size": "marker-size",
+    "stroke": "stroke",
+    "stroke_opacity": "stroke-opacity",
+    "stroke_width": "stroke-width",
+    "pattern": "pattern",
+    "fill": "fill",
+    "fill_opacity": "fill-opacity",
+    "folder_id": "folderId",
+    "visible": "visible",
+    "label_visible": "labelVisible",
+    "icon": "icon",
+}
+
+#: the envelope's folder id → title map (task.ts:90), built from its
+#: own ``features`` array, so folder ids never leak across maps.  A
+#: repeated id keeps its LAST Folder, as JS ``Map.set`` does
+#: (``map_from_entries`` would raise on the duplicate key instead).
+#: Folders without an id match nothing.
+_FOLDER_LOOKUP = """aggregate(
+    filter(_env.result.state.features,
+           f -> f.properties.`class` = 'Folder' AND f.id IS NOT NULL),
+    CAST(map() AS map<string,string>),
+    (acc, f) -> map_concat(map_filter(acc, (k, v) -> k != f.id),
+                           map(f.id, f.properties.title)))"""
+
+
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def decode_envelope(
@@ -39,90 +88,46 @@ def decode_envelope(
     execution time when the envelope shape is wrong.  ``strict=False``
     is the PERMISSIVE mode: bad envelopes yield zero feature rows.
     """
+    body = _quote(body_col)
     parsed = envelopes.withColumn(
-        "_env",
-        F.from_json(F.col(body_col), ENVELOPE_SCHEMA, {"mode": "FAILFAST"}),
+        "_env", F.from_json(F.col(body), ENVELOPE_SCHEMA, {"mode": "FAILFAST"})
     )
     if strict:
-        valid = (
-            F.col("_env").isNotNull()
-            & F.col("_env.result.state.features").isNotNull()
-            & (F.col("_env.result.state.type") == "FeatureCollection")
-        )
         # the guard must run per input row BEFORE explode (a null
         # features array would otherwise emit zero rows and never
         # evaluate the assertion): assert_true returns null on
-        # success, so isNull() is an always-true filter that throws on
+        # success, so IS NULL is an always-true filter that throws on
         # invalid envelopes.
         parsed = parsed.filter(
-            F.assert_true(
-                valid,
-                F.concat(F.lit("envelope failed schema validation: "), F.col(body_col)),
-            ).isNull()
+            "assert_true(_env IS NOT NULL"
+            " AND _env.result.state.features IS NOT NULL"
+            " AND _env.result.state.type = 'FeatureCollection',"
+            f" concat('envelope failed schema validation: ', {body}))"
+            " IS NULL"
         )
     else:
-        parsed = parsed.filter(F.col("_env.result.state.features").isNotNull())
-    ts_col = F.col("_env.result.timestamp")
+        parsed = parsed.filter("_env.result.state.features IS NOT NULL")
     # carry the envelope identity (map/share id) into its feature rows
     carry = [c for c in ("share_id",) if c in envelopes.columns]
     # the folder lookup gets its own projection so that it is computed
     # once per envelope BELOW the Generate: in the explode's select,
     # Spark would evaluate it above the Generate, carrying the whole
     # features array into every exploded row
-    parsed = parsed.withColumn(
-        "_folders", _folder_lookup(F.col("_env.result.state.features"))
-    )
-    feats = parsed.select(
+    feats = parsed.selectExpr("*", f"{_FOLDER_LOOKUP} AS _folders").selectExpr(
         *carry,
-        ts_col.alias("state_timestamp"),
+        "_env.result.timestamp AS state_timestamp",
         "_folders",
-        F.explode("_env.result.state.features").alias("f"),
+        "explode(_env.result.state.features) AS f",
     )
-    p = "f.properties"
-    return feats.select(
+    return feats.selectExpr(
         *carry,
-        F.col("f.id").alias("id"),
-        F.col(f"{p}.class").alias("class"),
-        F.col(f"{p}.title").alias("title"),
-        F.col(f"{p}.description").alias("description"),
-        F.col(f"{p}.creator").alias("creator"),
-        F.col(f"{p}.updated").alias("updated"),
-        F.col(f"{p}.marker-symbol").alias("marker_symbol"),
-        F.col(f"{p}.marker-rotation").alias("marker_rotation"),
-        F.col(f"{p}.marker-color").alias("marker_color"),
-        F.col(f"{p}.marker-size").alias("marker_size"),
-        F.col(f"{p}.stroke").alias("stroke"),
-        F.col(f"{p}.stroke-opacity").alias("stroke_opacity"),
-        F.col(f"{p}.stroke-width").alias("stroke_width"),
-        F.col(f"{p}.pattern").alias("pattern"),
-        F.col(f"{p}.fill").alias("fill"),
-        F.col(f"{p}.fill-opacity").alias("fill_opacity"),
-        F.col(f"{p}.folderId").alias("folder_id"),
-        F.col(f"{p}.visible").alias("visible"),
-        F.col(f"{p}.labelVisible").alias("label_visible"),
-        F.col(f"{p}.icon").alias("icon"),
-        F.col("f.geometry.type").alias("geometry_type"),
-        F.col("f.geometry.coordinates").alias("geometry_json"),
-        F.col("_folders")[F.col(f"{p}.folderId")].alias("folder_title"),
-        "state_timestamp",
-    )
-
-
-def _folder_lookup(features: Column) -> Column:
-    """The envelope's folder id → title map (task.ts:90), built from
-    its own ``features`` array, so folder ids never leak across maps.
-    A repeated id keeps its LAST Folder, as JS ``Map.set`` does
-    (``map_from_entries`` would raise on the duplicate key instead).
-    Folders without an id match nothing."""
-    folders = F.filter(
-        features,
-        lambda f: (f["properties"]["class"] == "Folder") & f["id"].isNotNull(),
-    )
-    return F.aggregate(
-        folders,
-        F.create_map().cast("map<string,string>"),
-        lambda acc, f: F.map_concat(
-            F.map_filter(acc, lambda k, _: k != f["id"]),
-            F.create_map(f["id"], f["properties"]["title"]),
+        "f.id AS id",
+        *(
+            f"f.properties.{_quote(prop)} AS {col}"
+            for col, prop in _PROPERTY_COLUMNS.items()
         ),
+        "f.geometry.type AS geometry_type",
+        "f.geometry.coordinates AS geometry_json",
+        "_folders[f.properties.folderId] AS folder_title",
+        "state_timestamp",
     )

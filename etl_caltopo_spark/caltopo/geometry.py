@@ -12,6 +12,11 @@ is parsed at its fixed depth (Point=1 … MultiPolygon=4): such a parse
 yields null for coordinates off that depth, which the sink cannot
 serialize, and re-prints integers as doubles, where the reference's
 in-place ``splice`` keeps the source text.
+
+The rest of the CalTopo chain is SQL expression text (see the decode
+module); the rewrite stays one ``F.regexp_replace`` Column, a handful
+of py4j round trips, so the pattern reaches the JVM as it is written
+here, never through SQL string-literal escaping.
 """
 
 from __future__ import annotations

@@ -2,6 +2,11 @@
 
 Reference execution order, each step cited; null-semantics quirks
 resolved per SURVEY §1.5 (uniform ``isNotNull``; absent ≡ null).
+
+Each filter and projection is one ``filter``/``selectExpr`` over SQL
+expression text, as in the decode module and for the same reason: a
+Column built from ``pyspark.sql.functions`` costs several py4j round
+trips per call, paid on every submit.
 """
 
 from __future__ import annotations
@@ -41,7 +46,7 @@ _METADATA_FIELDS = {
 def split_folders(features: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Partition-by-predicate (R5, task.ts:90,93-96): Folder rows
     become the dimension; all others continue.  Folder rows are
-    CONSUMED — never emitted (quirk Q5).
+    CONSUMED — never emitted (quirk Q5).  A null class is neither.
 
     When the batch spans multiple maps (a ``share_id`` column is
     present), the folder dimension keeps the map scope: the reference
@@ -49,19 +54,25 @@ def split_folders(features: DataFrame) -> tuple[DataFrame, DataFrame]:
     only meaningful within their own map.
     """
     scope = [c for c in ("share_id",) if c in features.columns]
-    folders = features.filter(F.col("class") == "Folder").select(
-        *scope,
-        F.col("id").alias("folder_key"),
-        F.col("title").alias("folder_title"),
+    folders = features.filter("`class` = 'Folder'").selectExpr(
+        *scope, "id AS folder_key", "title AS folder_title"
     )
-    rest = features.filter(F.col("class") != "Folder")
+    rest = features.filter("`class` != 'Folder'")
     return folders, rest
 
 
 def drop_null_geometry(features: DataFrame) -> DataFrame:
     """R6 (task.ts:97-100): features without geometry are dropped
     (SARTopo 'Operational Periods', CHANGELOG.md:130-132)."""
-    return features.filter(F.col("geometry_type").isNotNull())
+    return features.filter("geometry_type IS NOT NULL")
+
+
+#: R7: every non-null source property, keyed by its source spelling
+_METADATA = "map_filter(map({}), (k, v) -> v IS NOT NULL)".format(
+    ", ".join(f"'{key}', CAST({col} AS STRING)" for key, col in _METADATA_FIELDS.items())
+)
+#: R13/R14: a Point carrying a marker colour
+_HAS_MARKER = "geometry_type = 'Point' AND marker_color IS NOT NULL"
 
 
 def to_input_features(features: DataFrame) -> DataFrame:
@@ -83,44 +94,31 @@ def to_input_features(features: DataFrame) -> DataFrame:
       is null or dangling (quirk Q5)                (R15, task.ts:142-152)
     """
     truncated = truncate_coordinates(features)
-    is_point = F.col("geometry_type") == "Point"
-    has_marker = is_point & F.col("marker_color").isNotNull()
-
-    metadata_entries = []
-    for key, col_name in _METADATA_FIELDS.items():
-        metadata_entries += [F.lit(key), F.col(col_name).cast("string")]
-    metadata = F.map_filter(
-        F.create_map(*metadata_entries), lambda k, v: v.isNotNull()
-    )
-    # R14: marker-color removed from the metadata copy for Points
-    metadata = F.when(
-        has_marker, F.map_filter(metadata, lambda k, v: k != F.lit("marker-color"))
-    ).otherwise(metadata)
-
     scope = [c for c in ("share_id",) if c in truncated.columns]
-    return truncated.select(
+    return truncated.selectExpr(
         *scope,
         "id",
-        F.lit("Feature").alias("type"),
-        F.col("title").cast("string").alias("callsign"),
-        F.coalesce(F.col("description").cast("string"), F.lit("")).alias("remarks"),
-        F.lit(True).alias("archived"),
-        F.when(is_point, F.lit("u-d-p")).alias("cot_type"),
-        F.when(has_marker, F.concat(F.lit("#"), F.col("marker_color"))).alias(
-            "marker_color"
-        ),
-        F.when(has_marker, F.lit(1.0)).alias("marker_opacity"),
-        F.col("fill").cast("string").alias("fill"),
-        F.col("fill_opacity").cast("double").alias("fill_opacity"),
-        F.col("stroke").cast("string").alias("stroke"),
-        F.col("stroke_opacity").cast("double").alias("stroke_opacity"),
-        F.col("stroke_width").cast("double").alias("stroke_width"),
-        F.col("icon").cast("string").alias("icon"),
-        metadata.alias("metadata"),
+        "'Feature' AS type",
+        "CAST(title AS STRING) AS callsign",
+        "coalesce(CAST(description AS STRING), '') AS remarks",
+        "true AS archived",
+        "CASE WHEN geometry_type = 'Point' THEN 'u-d-p' END AS cot_type",
+        f"CASE WHEN {_HAS_MARKER} THEN concat('#', marker_color) END AS marker_color",
+        f"CASE WHEN {_HAS_MARKER} THEN 1.0D END AS marker_opacity",
+        "CAST(fill AS STRING) AS fill",
+        "CAST(fill_opacity AS DOUBLE) AS fill_opacity",
+        "CAST(stroke AS STRING) AS stroke",
+        "CAST(stroke_opacity AS DOUBLE) AS stroke_opacity",
+        "CAST(stroke_width AS DOUBLE) AS stroke_width",
+        "CAST(icon AS STRING) AS icon",
+        # R14: marker-color removed from the metadata copy for Points
+        f"CASE WHEN {_HAS_MARKER}"
+        f" THEN map_filter({_METADATA}, (k, v) -> k != 'marker-color')"
+        f" ELSE {_METADATA} END AS metadata",
         "folder_id",
         "geometry_type",
         "geometry_json",
-        F.concat(F.lit("/"), F.col("folder_title")).alias("path"),
+        "concat('/', folder_title) AS path",
     )
 
 

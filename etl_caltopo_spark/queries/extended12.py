@@ -1003,11 +1003,20 @@ def q_graph_2hop(
     # 675 MB write, 457 s stage CPU for two passes); explode(array(a,c))
     # emits both endpoints in the aggregate's single pass, and the
     # per-part count collapses map-side before its (tiny) exchange.
-    return (
+    out = (
         indirect.select(F.explode(F.array("a", "c")).alias("part"))
         .groupBy("part")
         .agg(F.count("*").cast("bigint").alias("n_2hop"))
     )
+    if os.environ.get("SPARK_GRAFT_LAZY_PLANS") == "1":
+        return out
+    # materialize the (one row per part) result so the degree cache can
+    # be released before returning, as llm/dedup.py does: a cache left
+    # behind stays pinned for the rest of the session.  localCheckpoint
+    # blocks go with the returned frame (ContextCleaner).
+    out = out.localCheckpoint(eager=True)
+    deg.unpersist()
+    return out
 
 
 @query(

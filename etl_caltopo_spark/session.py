@@ -53,6 +53,11 @@ def default_master() -> str:
     return os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
 
 
+#: shuffle partitions per core: the ~2-3x rule for the initial width,
+#: which AQE coalesces down at runtime
+SHUFFLE_PARTITIONS_PER_CORE = 2
+
+
 def build_spark(
     app_name: str = "etl-caltopo-spark",
     master: str | None = None,
@@ -61,9 +66,11 @@ def build_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``shuffle_partitions`` defaults to the core count of the local
-    master; on a real cluster it should be set to ~2-3x total cores (or
-    left to AQE's coalescing with a high initial value).
+    ``shuffle_partitions`` defaults to ``SPARK_GRAFT_SHUFFLE_PARTITIONS``,
+    else to :data:`SHUFFLE_PARTITIONS_PER_CORE` times the session's
+    ``defaultParallelism``: Spark's own core count, the cluster's total
+    on a cluster master and the JVM's (cgroup-bounded) processors for
+    ``local[*]``.
     """
     builder = SparkSession.builder.appName(app_name).master(master or default_master())
     for k, v in BUILD_CONF.items():
@@ -75,12 +82,17 @@ def build_spark(
         "spark.driver.memory",
         os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
     )
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    if shuffle_partitions is None and os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS"):
+        shuffle_partitions = int(os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"])
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if shuffle_partitions is None and "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        # the core count is only known once the context runs
+        width = SHUFFLE_PARTITIONS_PER_CORE * spark.sparkContext.defaultParallelism
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
     apply_runtime_conf(spark)
     return spark
 

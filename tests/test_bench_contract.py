@@ -94,3 +94,21 @@ def test_measurement_tail_budget():
     line = bench.emit_line(times, spread, 0.1, _fake_env())
     measurements = line[line.rindex('"queries"'):]
     assert len(measurements) < 2000, len(measurements)
+
+
+def test_default_shuffle_partitions_follow_the_cores(spark, monkeypatch):
+    """The shuffle width bench's env block echoes is twice the
+    session's defaultParallelism, unless SPARK_GRAFT_SHUFFLE_PARTITIONS
+    names it."""
+    from etl_caltopo_spark.session import build_spark
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    try:
+        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "7")
+        assert build_spark(app_name="etl-caltopo-spark-tests").conf.get(key) == "7"
+        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+        assert build_spark(app_name="etl-caltopo-spark-tests").conf.get(key) == str(2 * cores)
+    finally:
+        monkeypatch.undo()
+        build_spark(app_name="etl-caltopo-spark-tests")

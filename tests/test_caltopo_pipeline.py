@@ -348,3 +348,36 @@ def test_sink_posts_coordinates_off_the_declared_depth(spark, coords, posted):
     assert submit_idempotent(run_pipeline(df), "https://example.test/layer", poster) == 1
     [feature] = json.loads(bodies[0])["features"]
     assert json.dumps(feature["geometry"]["coordinates"]) == json.dumps(posted)
+
+
+def test_pipeline_build_is_a_few_gateway_round_trips(spark, monkeypatch):
+    """Building the chain hands Spark a few SQL expression texts: each
+    ``pyspark.sql.functions`` Column costs several py4j round trips,
+    and the chain built from them made ~2,600 per build (~0.5-0.9 s of
+    driver time on every submit); the SQL-text chain makes ~120."""
+    from py4j.clientserver import ClientServerConnection
+
+    source = fixture_envelope_df(spark)
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    run_pipeline(source)
+    monkeypatch.undo()
+    # 0 would mean py4j sent through another client than the one counted
+    assert 0 < len(sent) <= 300, len(sent)
+
+
+def test_decode_quotes_the_body_column(spark):
+    """The body column is named in SQL text, quoted as an identifier."""
+    from etl_caltopo_spark.caltopo.decode import decode_envelope
+
+    df = fixture_envelope_df(spark).withColumnRenamed("body_json", "body`json x")
+    assert decode_envelope(df, body_col="body`json x").count() == 16
+    with pytest.raises(Exception, match="envelope failed schema validation"):
+        bad = spark.createDataFrame([("s", '{"status": 7}')], "share_id string, `a-b` string")
+        decode_envelope(bad, body_col="a-b").collect()

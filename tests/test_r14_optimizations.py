@@ -218,3 +218,14 @@ def test_graph_2hop_fused_agg_matches_naive(spark, sf_dir):
         .collect()
     }
     assert fused == naive and len(fused) > 0
+
+
+def test_graph_2hop_releases_its_degree_cache(spark, sf_dir):
+    """The degree table is cached for the width probe and the main job;
+    it is released before the query returns, so no cached plan stays
+    behind in the session."""
+    from etl_caltopo_spark.queries.extended12 import q_graph_2hop
+
+    spark.catalog.clearCache()
+    assert q_graph_2hop(spark, sf_dir).count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -5,6 +5,8 @@ changes an operator's internals gets a focused test).
 1. fan_out's file-footprint split estimate == Spark's own
    df.rdd.getNumPartitions() on every test table x scale (io.py no
    longer pays a physical-planning pass per call).
+   Small files under a non-default minPartitionNum pack into fewer
+   splits than files, and fan_out follows the estimate there too.
 2. fan_out's DECISION is unchanged: the one-row-group sf sources still
    repartition to defaultParallelism; an already-wide frame stays.
 3. run_two_phase's feed-derived state-partition width: derived value
@@ -57,6 +59,32 @@ def test_fan_out_estimate_matches_spark_split_math(spark, sf_dir):
         ]
         est = _estimated_scan_splits(spark, sizes)
         assert est == actual, (name, sf_dir, est, actual)
+
+
+@pytest.mark.parametrize("min_partitions", [None, "1", "2"])
+def test_fan_out_estimate_matches_on_small_files(spark, tmp_path, min_partitions):
+    """Many small files under a non-default minPartitionNum: twice as
+    many files as cores can pack into fewer splits than cores, so
+    fan_out must follow the packing estimate, not the file count."""
+    target = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "small")
+    spark.range(0, 2 * target, 1, 2 * target).write.parquet(path)
+    key = "spark.sql.files.minPartitionNum"
+    if min_partitions is not None:
+        spark.conf.set(key, min_partitions)
+    try:
+        df = spark.read.parquet(path)
+        files = df.inputFiles()
+        assert len(files) == 2 * target
+        sizes = [os.path.getsize(unquote(urlparse(f).path)) for f in files]
+        actual = df.rdd.getNumPartitions()
+        assert _estimated_scan_splits(spark, sizes) == actual
+        want = target if actual < target else actual
+        assert fan_out(df).rdd.getNumPartitions() == want
+        if min_partitions is not None:
+            assert actual < target
+    finally:
+        spark.conf.unset(key)
 
 
 def test_fan_out_decision_unchanged(spark):
