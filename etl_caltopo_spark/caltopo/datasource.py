@@ -16,8 +16,9 @@ forms:
   Spark's scheduler owns retry/locality/backpressure.  The trade-off
   of packing: a failed GET fails its task, and the re-attempt
   re-fetches every map of that partition, not just the failed one.
-  The sink still posts one chunk per map (``sink.post_per_map``), so
-  packing changes neither a POST's size nor its idempotency key.
+  The sink still posts one FeatureCollection per map
+  (``sink.post_maps``), so packing changes neither a POST's size nor
+  its idempotency key.
 - **streaming**: ``spark.readStream.format("caltopo")`` — a
   SimpleDataSourceStreamReader whose offset is the envelope's server
   ``result.timestamp``; each micro-batch re-polls with the last
@@ -39,19 +40,18 @@ from __future__ import annotations
 
 import json
 from collections.abc import Iterator
-
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
-from etl_caltopo_spark.caltopo.sink import post_per_map, urllib_header_poster
+from etl_caltopo_spark.caltopo.sink import post_maps, urllib_header_poster
 from etl_caltopo_spark.caltopo.source import BASE_URL, fetch_all, map_state_url
 
 SCHEMA = "share_id string, body_json string"
@@ -120,39 +120,35 @@ class CalTopoStreamReader(SimpleDataSourceStreamReader):
 
 
 @dataclass
-class _PostedChunk(WriterCommitMessage):
-    n_features: int = 0
+class _Posted(WriterCommitMessage):
+    #: features one partition posted (an Arrow writer's ``write`` must
+    #: return a commit message; ``None`` fails the task)
+    n_features: int
 
 
-class CalTopoWriter(DataSourceWriter):
+class CalTopoWriter(DataSourceArrowWriter):
     """Executor-side FeatureCollection POST as a native write format
-    (R16, ``task.ts:154-159``): ``df.write.format("caltopo")
-    .option("url", ...).mode("append").save()`` posts each partition
-    one chunk per map through ``sink.post_per_map``, the path
-    ``sink.submit_idempotent`` takes above its collect threshold, so
-    every chunk carries its idempotency key and retries a 503.  The
-    write is wired into Spark's commit protocol (a failed partition
-    retries alone, and its re-sent chunk collapses on the key;
-    ``commit`` sees per-chunk feature counts).  Rows must carry the
-    transformed InputFeature columns (the output of
-    ``pipeline.run_pipeline``)."""
+    (R16, ``task.ts:154-159``): ``sink.features_json(df).write
+    .format("caltopo").option("url", ...).mode("append").save()`` posts
+    each partition's maps through ``sink.post_maps``, as
+    ``sink.submit_idempotent`` does on the driver, so every body
+    carries its idempotency key and retries a 503.  A map held whole
+    by one partition (as the ``caltopo`` read leaves it) posts the body
+    the submit posts.  A failed partition retries alone, and its
+    re-sent bodies collapse on their keys."""
 
-    def __init__(self, options: dict) -> None:
+    def __init__(self, options: dict, schema) -> None:
         self.url = options.get("url", "")
         if not self.url:
             raise ValueError("caltopo writer requires option url=<submit endpoint>")
+        if "feature" not in schema.fieldNames():
+            raise ValueError(
+                "caltopo writer takes sink.features_json(df): the frame has no "
+                f"'feature' column (columns: {', '.join(schema.fieldNames())})"
+            )
 
-    def write(self, iterator) -> _PostedChunk:
-        return _PostedChunk(
-            n_features=post_per_map(iterator, self.url, urllib_header_poster)
-        )
-
-    def commit(self, messages) -> None:
-        # nothing to finalize server-side; counts surface for logging
-        return None
-
-    def abort(self, messages) -> None:  # pragma: no cover - best effort
-        return None
+    def write(self, iterator) -> _Posted:
+        return _Posted(post_maps(iterator, self.url, urllib_header_poster))
 
 
 class CalTopoDataSource(DataSource):
@@ -174,7 +170,7 @@ class CalTopoDataSource(DataSource):
         return CalTopoStreamReader(self.options)
 
     def writer(self, schema, overwrite: bool) -> CalTopoWriter:
-        return CalTopoWriter(self.options)
+        return CalTopoWriter(self.options, schema)
 
 
 def register(spark) -> None:

@@ -35,8 +35,9 @@ def run_from_api(
 ) -> DataFrame:
     """The reference's control() flow (task.ts:63-160): validate env,
     fetch the map delta, run the transform pipeline.  Submit the result
-    with ``sink.submit_idempotent`` (size-dispatched driver/executor
-    POST) or ``df.write.format("caltopo")``."""
+    with ``sink.submit_idempotent`` (one POST per map from the driver)
+    or, beyond what the driver may collect,
+    ``sink.features_json(df).write.format("caltopo")``."""
     cfg = validate_env(env)
     envelopes = fetch_envelopes(spark, [cfg["ShareId"]], since, fetcher)
     return run_pipeline(envelopes)

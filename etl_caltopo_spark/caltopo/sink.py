@@ -1,28 +1,25 @@
 """Sink (ref task.ts:154-159: POST the FeatureCollection to the
 CloudTAK ETL API).
 
-Every POST goes through :func:`post_rows`: the rows become one
-canonical FeatureCollection (features sorted by id) sent through
+A submit posts one FeatureCollection per map, as the reference does
+once per invocation.  :func:`features_json` builds each feature's JSON
+text in the JVM; Python only groups the texts by map, sorts and joins
+them (:func:`post_maps`) and sends each body through
 :func:`post_idempotent`, so each body carries a content-derived
 ``Idempotency-Key`` and failed attempts retry a bounded number of
-times.  :func:`submit_idempotent` is the entry point and dispatches on
-output size: at reference scale (a map layer is O(10^2..10^4)
-features) it mirrors the Lambda's single driver-side POST; beyond
-``DRIVER_COLLECT_MAX`` features each partition POSTs one chunk per
-map (:func:`post_per_map`), so nothing large is ever collected to the
-driver.  The ``caltopo`` write format (``datasource.CalTopoWriter``)
-posts each partition the same way.
+times.  :func:`submit_idempotent` collects the texts to the driver as
+Arrow in one Spark job; the ``caltopo`` write format
+(``datasource.CalTopoWriter``) posts each partition's maps the same
+way from the executors, for outputs larger than the driver may hold.
 """
 
 from __future__ import annotations
 
 import hashlib
-import json
 import time
 import urllib.error
 from collections.abc import Callable, Iterable
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from etl_caltopo_spark.caltopo import source
@@ -37,79 +34,86 @@ HeaderPoster = Callable[[str, str, dict], None]
 IDEMPOTENCY_HEADER = "Idempotency-Key"
 
 
-def _row_to_feature(row) -> dict:
-    props = {
-        "callsign": row["callsign"],
-        "remarks": row["remarks"],
-        "archived": row["archived"],
-        "metadata": dict(row["metadata"]) if row["metadata"] is not None else {},
-    }
-    for src, dst in [
-        ("cot_type", "type"),
-        ("marker_color", "marker-color"),
-        ("marker_opacity", "marker-opacity"),
-        ("fill", "fill"),
-        ("fill_opacity", "fill-opacity"),
-        ("stroke", "stroke"),
-        ("stroke_opacity", "stroke-opacity"),
-        ("stroke_width", "stroke-width"),
-        ("icon", "icon"),
-    ]:
-        if row[src] is not None:
-            props[dst] = row[src]
-    if row["path"] is not None:
-        props["path"] = row["path"]
-    geometry = None
-    if row["geometry_type"] is not None:
-        geometry = {
-            "type": row["geometry_type"],
-            "coordinates": json.loads(row["geometry_json"]),
-        }
-    return {
-        "id": row["id"],
-        "type": "Feature",
-        "properties": props,
-        "geometry": geometry,
-    }
+def _finite(col: str) -> str:
+    # NaN and ±Infinity have no JSON text (RFC 8259): null them, so the
+    # key is omitted (absent ≡ null, SURVEY §1.5).  NaN compares above
+    # every double in Spark SQL, so one comparison drops both.
+    return f"CASE WHEN abs({col}) < CAST('Infinity' AS DOUBLE) THEN {col} END"
 
 
-def to_feature_collection(rows: Iterable) -> dict:
-    """Transformed rows → the canonical GeoJSON FeatureCollection dict
-    (the reference's submit payload shape, task.ts:154-157).  Features
-    are sorted by id: a re-run that meets the same rows in another
-    order (``collect()`` order, a Spark task re-attempt) serializes the
-    byte-identical body and so carries the identical idempotency key."""
-    return {
-        "type": "FeatureCollection",
-        "features": sorted(
-            (_row_to_feature(r) for r in rows), key=lambda f: str(f["id"])
-        ),
-    }
+#: the properties every feature carries, null or not, in body order
+_ALWAYS = (
+    "named_struct('callsign', callsign, 'remarks', remarks,"
+    " 'archived', archived,"
+    " 'metadata', coalesce(metadata, CAST(map() AS MAP<STRING, STRING>)))"
+)
+#: the optional properties, in body order; a null one is omitted
+_OPTIONAL = "named_struct({})".format(
+    ", ".join(
+        f"'{key}', {expr}"
+        for key, expr in [
+            ("type", "cot_type"),
+            ("marker-color", "marker_color"),
+            ("marker-opacity", "marker_opacity"),
+            ("fill", "fill"),
+            ("fill-opacity", _finite("fill_opacity")),
+            ("stroke", "stroke"),
+            ("stroke-opacity", _finite("stroke_opacity")),
+            ("stroke-width", _finite("stroke_width")),
+            ("icon", "icon"),
+            ("path", "path"),
+        ]
+    )
+)
+#: ``{"id":…,"type":"Feature","properties":{<always>,<optional>},
+#: "geometry":…}``: the head's closing ``}}`` is cut so the optional
+#: keys (their struct's braces cut) join the same properties object;
+#: the coordinates are ``geometry_json`` spliced in as text (null when
+#: the source geometry has none)
+_FEATURE = (
+    "concat(concat_ws(',',"
+    " regexp_replace(to_json(named_struct('id', id, 'type', 'Feature',"
+    f" 'properties', {_ALWAYS}), map('ignoreNullFields', 'false')), '[}}][}}]$', ''),"
+    f" nullif(btrim(to_json({_OPTIONAL}, map('ignoreNullFields', 'true')), '{{}}'), '')),"
+    " '},\"geometry\":',"
+    " CASE WHEN geometry_type IS NULL THEN 'null' ELSE concat("
+    "regexp_replace(to_json(named_struct('type', geometry_type)), '[}]$', ''),"
+    " ',\"coordinates\":', coalesce(geometry_json, 'null'), '}') END,"
+    " '}') AS feature"
+)
 
 
-def post_rows(rows: Iterable, url: str, poster: HeaderPoster, **retry) -> int:
-    """POST ``rows`` as one canonical FeatureCollection through
-    :func:`post_idempotent` (``retry`` is passed on to it).  Every sink
-    path posts through here: the driver-side submit, the per-partition
-    submit and the ``caltopo`` writer.  Returns the feature count."""
-    fc = to_feature_collection(rows)
-    post_idempotent(poster, url, json.dumps(fc), **retry)
-    return len(fc["features"])
+def features_json(df: DataFrame) -> DataFrame:
+    """Transformed InputFeature rows (``pipeline.run_pipeline``'s
+    output) → ``(share_id, id, feature)``: ``feature`` is the row's
+    GeoJSON Feature as JSON text, built in the JVM.  ``share_id`` is
+    null for a frame without that column (one map)."""
+    sid = "share_id" if "share_id" in df.columns else "CAST(NULL AS STRING) AS share_id"
+    return df.selectExpr(sid, "id", _FEATURE)
 
 
-def post_per_map(rows: Iterable, url: str, poster: HeaderPoster, **retry) -> int:
-    """POST one partition's rows through :func:`post_rows`, one chunk
-    per map (``share_id``; rows without that field are one chunk).  A
-    chunk then holds exactly its map's features however many maps the
-    read packed into the partition: its size is one map's, a 503
-    re-sends one map, and its idempotency key does not depend on the
-    cluster's slot count, so a re-run on a resized cluster re-posts
-    each map under the key it had.  Returns the feature count."""
-    chunks: dict = {}
-    for row in rows:
-        sid = row["share_id"] if "share_id" in row.__fields__ else None
-        chunks.setdefault(sid, []).append(row)
-    return sum(post_rows(chunk, url, poster, **retry) for chunk in chunks.values())
+def _feature_collection(features: Iterable[str]) -> str:
+    """Feature JSON texts → one FeatureCollection body."""
+    return '{"type":"FeatureCollection","features":[' + ",".join(features) + "]}"
+
+
+def post_maps(batches: Iterable, url: str, poster: HeaderPoster, **retry) -> int:
+    """POST :func:`features_json` rows, given as Arrow record batches,
+    as one FeatureCollection per map through :func:`post_idempotent`
+    (``retry`` is passed on to it).  A map's features are sorted by id
+    (null first), then by their text: a re-run that meets the same rows
+    in another order (collect order, a Spark task re-attempt) posts the
+    byte-identical body and so carries the identical key.  Returns the
+    feature count."""
+    maps: dict = {}
+    for batch in batches:
+        cols = batch.to_pydict()
+        for sid, fid, feature in zip(cols["share_id"], cols["id"], cols["feature"]):
+            maps.setdefault(sid, []).append((fid is not None, fid or "", feature))
+    for rows in maps.values():
+        body = _feature_collection(feature for *_, feature in sorted(rows))
+        post_idempotent(poster, url, body, **retry)
+    return sum(map(len, maps.values()))
 
 
 def urllib_header_poster(url: str, body: str, headers: dict) -> None:
@@ -117,8 +121,8 @@ def urllib_header_poster(url: str, body: str, headers: dict) -> None:
     given headers and RAISES on any non-2xx response (urllib's
     HTTPError), which is exactly what :func:`post_idempotent`'s retry
     loop needs.  Importable on executors (lives in the package, not in
-    a test module), so it works under ``foreachPartition``.  A sink
-    that never answers raises after ``source.HTTP_TIMEOUT_S``, so the
+    a test module), so the ``caltopo`` writer can use it.  A sink that
+    never answers raises after ``source.HTTP_TIMEOUT_S``, so the
     retries still run."""
     from urllib.request import Request, urlopen
 
@@ -192,46 +196,24 @@ def post_idempotent(
             attempt += 1
 
 
-DRIVER_COLLECT_MAX = 10_000
-
-
 def submit_idempotent(
     df: DataFrame,
     url: str,
     poster: HeaderPoster,
-    driver_collect_max: int = DRIVER_COLLECT_MAX,
     max_retries: int = 4,
     backoff_s: float = 0.05,
 ) -> int:
-    """The sink (R16, task.ts:154-159).  The feature count decides the
-    path: at-or-below ``driver_collect_max`` features, a single
-    driver-side POST (reference-faithful — the Lambda also submits the
-    whole collection at once); above it, each partition POSTs one
-    chunk per map (:func:`post_per_map`) so the payload never
-    materializes on the driver.  Every POST goes through
-    :func:`post_rows`.  The frame is persisted around the
-    count, so the count and the POSTs read the source once: without
-    the cache the POSTs would re-fetch and re-decode every map.  A
-    frame the caller already persisted is left as it is.  Determinism
-    of the feeding plan is the caller's contract: an upstream that
-    splits a map's rows across partitions differently between task
-    attempts changes chunk contents, and so their keys.  Returns the
+    """The sink (R16, task.ts:154-159): one Spark job collects
+    :func:`features_json` of ``df`` to the driver as Arrow, and
+    :func:`post_maps` posts one FeatureCollection per map.  When no
+    feature survives, one empty FeatureCollection is posted.  The
+    collect is bounded by ``spark.driver.maxResultSize``; beyond it,
+    write ``features_json(df)`` with the ``caltopo`` format.  The
+    frame's storage level is left as the caller set it.  Returns the
     feature count."""
     retry = {"max_retries": max_retries, "backoff_s": backoff_s}
-
-    def post_partition(rows) -> None:
-        post_per_map(rows, url, poster, **retry)
-
-    owned = df.storageLevel == StorageLevel.NONE
-    if owned:
-        df = df.persist()
-    try:
-        n = df.count()
-        if n <= driver_collect_max:
-            post_rows(df.collect(), url, poster, **retry)
-        else:
-            df.foreachPartition(post_partition)
-        return n
-    finally:
-        if owned:
-            df.unpersist()
+    table = features_json(df).toArrow()
+    if table.num_rows == 0:
+        post_idempotent(poster, url, _feature_collection([]), **retry)
+        return 0
+    return post_maps(table.to_batches(), url, poster, **retry)

@@ -4,16 +4,83 @@ etl_caltopo_spark/caltopo/*)."""
 
 from __future__ import annotations
 
+import importlib.util
 import json
+import os
+import sys
+from collections.abc import Iterable
 
 import pytest
+from conftest import strict_loads
 
 from etl_caltopo_spark.caltopo.fixtures import _feature, fixture_envelope_df
 from etl_caltopo_spark.caltopo.pipeline import run_from_api, run_pipeline
 from etl_caltopo_spark.caltopo.registry import schema
-from etl_caltopo_spark.caltopo.sink import to_feature_collection
+from etl_caltopo_spark.caltopo.sink import features_json, submit_idempotent
 from etl_caltopo_spark.caltopo.source import map_state_url, validate_env
 from etl_caltopo_spark.caltopo.fixtures import fixture_envelope_json
+
+
+def _row_to_feature(row) -> dict:
+    """Reference serializer: one transformed row → its GeoJSON Feature
+    dict, built in Python (the sink builds the same JSON in the JVM)."""
+    props = {
+        "callsign": row["callsign"],
+        "remarks": row["remarks"],
+        "archived": row["archived"],
+        "metadata": dict(row["metadata"]) if row["metadata"] is not None else {},
+    }
+    for src, dst in [
+        ("cot_type", "type"),
+        ("marker_color", "marker-color"),
+        ("marker_opacity", "marker-opacity"),
+        ("fill", "fill"),
+        ("fill_opacity", "fill-opacity"),
+        ("stroke", "stroke"),
+        ("stroke_opacity", "stroke-opacity"),
+        ("stroke_width", "stroke-width"),
+        ("icon", "icon"),
+    ]:
+        if row[src] is not None:
+            props[dst] = row[src]
+    if row["path"] is not None:
+        props["path"] = row["path"]
+    geometry = None
+    if row["geometry_type"] is not None:
+        geometry = {
+            "type": row["geometry_type"],
+            "coordinates": json.loads(row["geometry_json"]),
+        }
+    return {
+        "id": row["id"],
+        "type": "Feature",
+        "properties": props,
+        "geometry": geometry,
+    }
+
+
+def to_feature_collection(rows: Iterable) -> dict:
+    """Reference serializer: rows → the FeatureCollection dict, features
+    sorted by id."""
+    return {
+        "type": "FeatureCollection",
+        "features": sorted(
+            (_row_to_feature(r) for r in rows), key=lambda f: str(f["id"])
+        ),
+    }
+
+
+def _submitted(df) -> list[str]:
+    """The bodies ``submit_idempotent`` posts for ``df``, each checked
+    to be strict JSON."""
+    bodies = []
+
+    def poster(url: str, body: str, headers: dict) -> None:
+        strict_loads(body)
+        bodies.append(body)
+
+    submit_idempotent(df, "https://example.test/layer", poster)
+    return bodies
 
 
 @pytest.fixture(scope="module")
@@ -105,8 +172,8 @@ def test_metadata_passthrough(result):
 
 
 def test_sink_feature_collection(spark):
-    out = run_pipeline(fixture_envelope_df(spark))
-    fc = to_feature_collection(out.collect())
+    [body] = _submitted(run_pipeline(fixture_envelope_df(spark)))
+    fc = json.loads(body)
     assert fc["type"] == "FeatureCollection"
     by_id = {f["id"]: f for f in fc["features"]}
     f7 = by_id["F7"]
@@ -114,6 +181,84 @@ def test_sink_feature_collection(spark):
     assert f7["properties"]["type"] == "u-d-p"
     assert f7["geometry"]["coordinates"] == [7.0, 7.0]
     assert by_id["F5"]["properties"]["path"] == "/Team Alpha"
+
+
+def _perfbench_corpus(maps: int, features_per_map: int):
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench",
+        "envelopes.py",
+    )
+    spec = importlib.util.spec_from_file_location("perfbench_envelopes", path)
+    envelopes = sys.modules.setdefault(spec.name, importlib.util.module_from_spec(spec))
+    spec.loader.exec_module(envelopes)
+    bodies = envelopes.generate(1, maps, features_per_map).bodies
+    return [(sid, body.decode("utf-8")) for sid, body in sorted(bodies.items())]
+
+
+@pytest.mark.parametrize(
+    "corpus",
+    [None, (8, 150), (4, 3000)],
+    ids=["fixture", "perfbench-fanout", "perfbench-bulk"],
+)
+def test_sink_bodies_match_the_reference_serializer(spark, corpus):
+    """Each map's posted body, parsed, equals the reference
+    serializer's FeatureCollection of that map's rows: the same
+    features in the same order, each with its keys and its properties'
+    keys in the same order (the metadata map's key order is Spark's
+    map order, which the reference never fixed)."""
+    if corpus is None:
+        envelopes = fixture_envelope_df(spark)
+    else:
+        envelopes = spark.createDataFrame(
+            _perfbench_corpus(*corpus), "share_id string, body_json string"
+        )
+    out = run_pipeline(envelopes)
+    by_map: dict = {}
+    for row in out.collect():
+        by_map.setdefault(row["share_id"], []).append(row)
+
+    def canonical(fc: dict) -> str:
+        return json.dumps(fc, sort_keys=True)
+
+    def key_order(fc: dict) -> list:
+        return [(list(f), list(f["properties"])) for f in fc["features"]]
+
+    expected = sorted((to_feature_collection(rows) for rows in by_map.values()), key=canonical)
+    posted = sorted((json.loads(body) for body in _submitted(out)), key=canonical)
+    assert posted == expected
+    assert [key_order(fc) for fc in posted] == [key_order(fc) for fc in expected]
+
+
+def test_sink_nulls_non_finite_style_numbers(spark):
+    """NaN and Infinity have no JSON text: a non-finite style number is
+    left out of the body (absent ≡ null) rather than posted as a bare
+    token an RFC 8259 parser refuses; the metadata keeps the source
+    text."""
+    body = _envelope([
+        _feature(
+            "nf", "Shape", "nf", _POINT,
+            **{"fill-opacity": "NaN", "stroke-opacity": "-Infinity",
+               "stroke-width": "Infinity"},
+        )
+    ])
+    df = spark.createDataFrame([("S", body)], "share_id string, body_json string")
+    out = run_pipeline(df)
+    [row] = out.collect()
+    assert row["fill_opacity"] != row["fill_opacity"]  # NaN reached the sink
+    [posted] = _submitted(out)
+    props = strict_loads(posted)["features"][0]["properties"]
+    assert not {"fill-opacity", "stroke-opacity", "stroke-width"} & set(props)
+    assert props["metadata"]["fill-opacity"] == "NaN"
+    assert props["metadata"]["stroke-width"] == "Infinity"
+
+
+def test_features_json_without_a_share_id_is_one_map(spark):
+    """A frame with no ``share_id`` column posts one body."""
+    out = run_pipeline(fixture_envelope_df(spark)).drop("share_id")
+    assert features_json(out).columns == ["share_id", "id", "feature"]
+    [body] = _submitted(out.repartition(3))
+    assert len(json.loads(body)["features"]) == 14
 
 
 def test_run_from_api_with_fake_fetcher(spark):
@@ -196,27 +341,25 @@ def test_env_validation():
         validate_env({"ShareId": "X", "DEBUG": "yes"})
 
 
-def test_foreach_partition_post_sink(spark, tmp_path):
-    """Executor-side batched POST: every surviving feature reaches the
-    sink exactly once across partition-level requests."""
-    import glob
-    import json as _json
-    import uuid
+def test_foreach_partition_post_sink(spark, fixture_server):
+    """Executor-side batched POST (the ``caltopo`` writer): every
+    surviving feature reaches the sink exactly once across
+    partition-level requests."""
+    from etl_caltopo_spark.caltopo.datasource import register
 
-    from etl_caltopo_spark.caltopo.sink import submit_idempotent
-
-    out_dir = tmp_path / "posts"
-    out_dir.mkdir()
-
-    def poster(url: str, body: str, headers: dict) -> None:
-        # executor-side capture: one file per partition POST
-        (out_dir / f"{uuid.uuid4().hex}.json").write_text(body)
-
+    url, state = fixture_server
+    register(spark)
+    state["posts"] = []
+    state["seen_keys"] = set()
     df = run_pipeline(fixture_envelope_df(spark)).repartition(4)
-    submit_idempotent(df, "https://example.test/layer", poster, driver_collect_max=0)
+    (
+        features_json(df).write.format("caltopo")
+        .option("url", f"{url}/api/v1/layer/PART/submit")
+        .mode("append")
+        .save()
+    )
     posted_ids = []
-    for f in glob.glob(str(out_dir / "*.json")):
-        fc = _json.loads(open(f).read())
+    for fc in state["posts"]:
         assert fc["type"] == "FeatureCollection"
         posted_ids += [feat["id"] for feat in fc["features"]]
     assert sorted(posted_ids) == sorted(
@@ -258,59 +401,36 @@ def test_schema_introspection():
     parsed = _json.loads(schema_json("input"))
     assert [f["name"] for f in parsed["fields"]] == ["ShareId", "DEBUG"]
 
-def test_submit_dispatches_on_size(spark, tmp_path):
-    """submit_idempotent is the sink: one driver-side POST at reference
-    scale, executor-side partition POSTs above the threshold — same
-    feature multiset either way."""
-    import glob
-    import json as _json
-    import uuid
-
-    from etl_caltopo_spark.caltopo.sink import submit_idempotent
-
-    df = run_pipeline(fixture_envelope_df(spark)).repartition(4)
-    expected = sorted(r["id"] for r in df.collect())
-
-    # small output → single driver POST
-    driver_posts = []
-
-    def driver_poster(url: str, body: str, headers: dict) -> None:
-        driver_posts.append(body)
-
-    n = submit_idempotent(df, "https://example.test/layer", driver_poster)
-    assert n == len(expected)
-    assert len(driver_posts) == 1
-    fc = _json.loads(driver_posts[0])
-    assert sorted(f["id"] for f in fc["features"]) == expected
-
-    # above the threshold → per-partition executor POSTs
-    out_dir = tmp_path / "posts"
-    out_dir.mkdir()
-
-    def part_poster(url: str, body: str, headers: dict) -> None:
-        (out_dir / f"{uuid.uuid4().hex}.json").write_text(body)
-
-    n = submit_idempotent(
-        df, "https://example.test/layer", part_poster, driver_collect_max=5
+def test_submit_posts_one_body_per_map(spark):
+    """submit_idempotent posts one FeatureCollection per map, however
+    the maps' rows are spread over partitions, and returns the feature
+    count; every feature is posted once."""
+    envelopes = spark.createDataFrame(
+        [(f"share-{i}", fixture_envelope_json()) for i in range(3)],
+        "share_id string, body_json string",
     )
-    assert n == len(expected)
-    files = glob.glob(str(out_dir / "*.json"))
-    assert len(files) > 1  # partition path, not one driver payload
-    posted = []
-    for f in files:
-        posted += [feat["id"] for feat in _json.loads(open(f).read())["features"]]
+    df = run_pipeline(envelopes).repartition(4)
+    expected = sorted(r["id"] for r in df.collect())
+    bodies = []
+
+    def poster(url: str, body: str, headers: dict) -> None:
+        bodies.append(strict_loads(body))
+
+    n = submit_idempotent(df, "https://example.test/layer", poster)
+    assert n == len(expected) == 3 * 14
+    assert len(bodies) == 3
+    posted = [f["id"] for fc in bodies for f in fc["features"]]
     assert sorted(posted) == expected
 
 
 def test_submit_releases_only_its_own_cache(spark):
-    """submit_idempotent persists its input for the count and the POST,
-    then unpersists it; a frame the caller persisted stays persisted."""
+    """submit_idempotent caches nothing: a frame it was given unpersisted
+    stays unpersisted, and a frame the caller persisted stays
+    persisted."""
     from pyspark import StorageLevel
 
-    from etl_caltopo_spark.caltopo.sink import submit_idempotent
-
     def poster(url: str, body: str, headers: dict) -> None:
-        pass
+        strict_loads(body)
 
     df = run_pipeline(fixture_envelope_df(spark))
     assert submit_idempotent(df, "https://example.test/layer", poster) == 14
@@ -322,31 +442,44 @@ def test_submit_releases_only_its_own_cache(spark):
     cached.unpersist()
 
 
+def test_submit_runs_one_spark_job(spark):
+    """A submit is one Spark job: the Arrow collect, with no count pass
+    before it."""
+    sc = spark.sparkContext
+    df = run_pipeline(fixture_envelope_df(spark))
+    group = "caltopo-submit-one-job"
+    sc.setJobGroup(group, "submit_idempotent")
+    try:
+        n = submit_idempotent(
+            df, "https://example.test/layer", lambda url, body, headers: strict_loads(body)
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n == 14
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 @pytest.mark.parametrize(
     "coords, posted",
     [
         ([[1, 2, 3, 4]], [[1, 2, 3]]),  # deeper than a Point's depth
         ([True, 1, 2, 3], [True, 1, 2]),  # a bool where a number belongs
         ([1, 2, 3, 4], [1, 2, 3]),  # integers keep their text
+        (None, None),  # a geometry without coordinates
     ],
 )
 def test_sink_posts_coordinates_off_the_declared_depth(spark, coords, posted):
     """A Point whose coordinates do not parse at its depth is cut like
     any other tree and posted, as the reference's coordEach splice
-    leaves it: it is neither nulled nor re-printed as doubles."""
-    from etl_caltopo_spark.caltopo.sink import submit_idempotent
-
+    leaves it: it is neither nulled nor re-printed as doubles.  A Point
+    without coordinates is posted with null coordinates."""
     body = _envelope([
         _feature("p", "Marker", "p", {"type": "Point", "coordinates": coords})
     ])
     df = spark.createDataFrame([("S", body)], "share_id string, body_json string")
-    bodies = []
-
-    def poster(url: str, body: str, headers: dict) -> None:
-        bodies.append(body)
-
-    assert submit_idempotent(run_pipeline(df), "https://example.test/layer", poster) == 1
-    [feature] = json.loads(bodies[0])["features"]
+    [posted_body] = _submitted(run_pipeline(df))
+    [feature] = json.loads(posted_body)["features"]
     assert json.dumps(feature["geometry"]["coordinates"]) == json.dumps(posted)
 
 

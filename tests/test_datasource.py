@@ -5,77 +5,13 @@ from __future__ import annotations
 
 import json
 import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from types import SimpleNamespace
 
 import pytest
 
 from etl_caltopo_spark.caltopo.datasource import register
-from etl_caltopo_spark.caltopo.fixtures import fixture_envelope_json
 from etl_caltopo_spark.caltopo.pipeline import run_pipeline
-
-
-@pytest.fixture(scope="module")
-def fixture_server():
-    """Serves the fixture envelope at /api/v1/map/<id>/since/<n>,
-    echoing the requested since value into result.timestamp + 1000 so
-    the stream reader has an advancing offset, and the map id into
-    every feature's description, so no two maps post the same chunk.
-    Counts requests."""
-    state = {"requests": []}
-    envelope = fixture_envelope_json()
-
-    class Handler(BaseHTTPRequestHandler):
-        def do_GET(self):
-            state["requests"].append(self.path)
-            parts = self.path.strip("/").split("/")
-            since = int(parts[-1])
-            body = json.loads(envelope)
-            body["result"]["timestamp"] = max(since, 0) + 1000
-            for feature in body["result"]["state"]["features"]:
-                feature["properties"]["description"] = parts[-3]
-            data = json.dumps(body).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            self.wfile.write(data)
-
-        def do_POST(self):
-            n = int(self.headers.get("Content-Length", "0"))
-            payload = json.loads(self.rfile.read(n).decode("utf-8"))
-            # flaky mode: fail the next N POSTs with 503 (the retry
-            # contract's crash model) — the body is consumed first,
-            # like a real proxy timeout after upload
-            if state.get("fail_next", 0) > 0:
-                state["fail_next"] -= 1
-                state.setdefault("failures", []).append(self.path)
-                self.send_response(503)
-                self.send_header("Content-Length", "4")
-                self.end_headers()
-                self.wfile.write(b"busy")
-                return
-            key = self.headers.get("Idempotency-Key")
-            if key is not None and key in state.setdefault("seen_keys", set()):
-                # duplicate delivery: acknowledge, do NOT re-record
-                state.setdefault("dup_posts", []).append(key)
-            else:
-                if key is not None:
-                    state["seen_keys"].add(key)
-                state.setdefault("posts", []).append(payload)
-            self.send_response(200)
-            self.send_header("Content-Length", "2")
-            self.end_headers()
-            self.wfile.write(b"ok")
-
-        def log_message(self, *a):  # quiet
-            pass
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield f"http://127.0.0.1:{srv.server_port}", state
-    srv.shutdown()
+from etl_caltopo_spark.caltopo.sink import features_json
 
 
 def test_batch_read_one_partition_per_map(spark, fixture_server):
@@ -130,10 +66,10 @@ def test_register_without_a_spark_context_reads_one_partition_per_map():
 def test_batch_read_packs_maps_into_read_slots(spark, fixture_server):
     """More maps than read slots: one partition per slot, each map one
     row from one GET, the same rows as the one-partition-per-map read,
-    and every feature delivered exactly once by both submit paths.  The
-    per-partition path posts one chunk per map, under the same keys as
-    from the one-partition-per-map read: chunk keys do not depend on
-    the slot count."""
+    and every feature delivered exactly once by the submit and by the
+    ``caltopo`` writer.  Both post one body per map, under the same
+    keys, and the same as from the one-partition-per-map read: body
+    keys do not depend on the slot count."""
     from etl_caltopo_spark.caltopo.datasource import CalTopoDataSource
     from etl_caltopo_spark.caltopo.sink import submit_idempotent
 
@@ -149,16 +85,24 @@ def test_batch_read_packs_maps_into_read_slots(spark, fixture_server):
             .load()
         )
 
-    def submit(frame, driver_collect_max):
+    def submit(frame, write=False):
         state["posts"] = []
         state["seen_keys"] = set()
-        n = submit_idempotent(
-            run_pipeline(frame),
-            f"{url}/api/v1/layer/PACK/submit",
-            _http_header_poster,
-            driver_collect_max=driver_collect_max,
-            backoff_s=0.001,
-        )
+        n = None
+        if write:
+            (
+                features_json(run_pipeline(frame)).write.format("caltopo")
+                .option("url", f"{url}/api/v1/layer/PACK/submit")
+                .mode("append")
+                .save()
+            )
+        else:
+            n = submit_idempotent(
+                run_pipeline(frame),
+                f"{url}/api/v1/layer/PACK/submit",
+                _http_header_poster,
+                backoff_s=0.001,
+            )
         posted = sorted(
             (f["id"], f["properties"]["remarks"])
             for fc in state["posts"]
@@ -171,7 +115,7 @@ def test_batch_read_packs_maps_into_read_slots(spark, fixture_server):
         per_map = read()
         assert per_map.rdd.getNumPartitions() == len(maps)
         per_map_rows = per_map.collect()
-        _, _, per_map_keys = submit(per_map, 0)
+        _, _, per_map_keys = submit(per_map)
     finally:
         register(spark)
     assert len(per_map_keys) == len(maps)
@@ -186,11 +130,13 @@ def test_batch_read_packs_maps_into_read_slots(spark, fixture_server):
 
     expected = sorted((r["id"], r["remarks"]) for r in run_pipeline(packed).collect())
     assert len(expected) == 14 * len(maps)
-    for driver_collect_max in (10_000, 0):
-        n, posted, keys = submit(packed, driver_collect_max)
-        assert n == len(expected)
-        assert posted == expected
+    n, posted, keys = submit(packed)
+    assert n == len(expected)
+    assert posted == expected
     assert keys == per_map_keys
+    _, written, written_keys = submit(packed, write=True)
+    assert written == expected
+    assert written_keys == keys
 
 
 def test_batch_read_feeds_pipeline(spark, fixture_server):
@@ -252,9 +198,11 @@ def test_stream_read_advances_since_offset(spark, fixture_server, tmp_path):
 
 
 def test_write_format_posts_feature_collections(spark, fixture_server):
-    """df.write.format("caltopo") submits one FeatureCollection POST
-    per non-empty partition from the EXECUTORS; the union of posted
-    features equals the pipeline output exactly once."""
+    """features_json(df).write.format("caltopo") posts one
+    FeatureCollection per map and non-empty partition from the
+    EXECUTORS; the union of posted features equals the pipeline output
+    exactly once.  A frame without the ``feature`` column is refused
+    before any task runs."""
     url, state = fixture_server
     register(spark)
     from etl_caltopo_spark.caltopo.fixtures import fixture_envelope_df
@@ -264,7 +212,7 @@ def test_write_format_posts_feature_collections(spark, fixture_server):
     state["posts"] = []
     state["seen_keys"] = set()
     (
-        out.write.format("caltopo")
+        features_json(out).write.format("caltopo")
         .option("url", f"{url}/api/v1/layer/TEST/submit")
         .mode("append")
         .save()
@@ -275,14 +223,22 @@ def test_write_format_posts_feature_collections(spark, fixture_server):
     assert sorted(posted) == expected
     assert all(fc["type"] == "FeatureCollection" for fc in posts)
 
+    state["posts"] = []
+    with pytest.raises(Exception, match="features_json"):
+        (
+            out.write.format("caltopo")
+            .option("url", f"{url}/api/v1/layer/TEST/submit")
+            .mode("append")
+            .save()
+        )
+    assert state["posts"] == []
+
 
 # --- HTTP sink redelivery contract (VERDICT r11 #3) -----------------
 
 
-# the library's stdlib poster is used directly: it lives in the
-# package, so executors can unpickle references to it (a poster
-# defined in this test module would fail foreachPartition with
-# ModuleNotFoundError: test_datasource is not on executor sys.path)
+# the library's stdlib poster is used directly: it is the poster the
+# caltopo writer uses on executors
 from etl_caltopo_spark.caltopo.sink import urllib_header_poster as _http_header_poster  # noqa: E402
 
 
@@ -351,8 +307,8 @@ def test_double_delivery_collapses_on_idempotency_key(fixture_server):
 def test_submit_idempotent_partition_path_survives_redelivery(
     spark, fixture_server
 ):
-    """Executor-side per-partition POSTs through a flaky server:
-    retries recover each partition exactly once, and a full re-run
+    """Per-map POSTs of a repartitioned frame through a flaky server:
+    retries recover each map's body exactly once, and a full re-run
     (task-retry / job-redelivery model) adds nothing."""
     from etl_caltopo_spark.caltopo.sink import submit_idempotent
 
@@ -363,12 +319,11 @@ def test_submit_idempotent_partition_path_survives_redelivery(
     expected = sorted(r["id"] for r in out.collect())
     state["posts"] = []
     state["seen_keys"] = set()
-    state["fail_next"] = 3  # sprinkle failures across partition posts
+    state["fail_next"] = 3  # three 503s before the body is accepted
     n = submit_idempotent(
         out,
         f"{url}/api/v1/layer/IDEM/submit",
         _http_header_poster,
-        driver_collect_max=0,  # force the executor path
         backoff_s=0.001,
     )
     assert n == len(expected)
@@ -381,18 +336,17 @@ def test_submit_idempotent_partition_path_survives_redelivery(
         out,
         f"{url}/api/v1/layer/IDEM/submit",
         _http_header_poster,
-        driver_collect_max=0,
         backoff_s=0.001,
     )
     posted2 = sorted(f["id"] for fc in state["posts"] for f in fc["features"])
     assert posted2 == expected
 
 
-@pytest.mark.parametrize("driver_collect_max", [10_000, 0])
-def test_submit_fetches_each_map_once(spark, fixture_server, driver_collect_max):
+@pytest.mark.parametrize("path", ["submit", "write"])
+def test_submit_fetches_each_map_once(spark, fixture_server, path):
     """One submit of the pipeline over the caltopo source makes exactly
-    one GET per map, on the driver-collect path and on the
-    per-partition path alike: the count and the POSTs share one read."""
+    one GET per map, through ``submit_idempotent`` and through the
+    ``caltopo`` writer alike."""
     from etl_caltopo_spark.caltopo.sink import submit_idempotent
 
     url, state = fixture_server
@@ -405,20 +359,30 @@ def test_submit_fetches_each_map_once(spark, fixture_server, driver_collect_max)
         .load()
     )
     state["requests"].clear()
-    n = submit_idempotent(
-        run_pipeline(source),
-        f"{url}/api/v1/layer/ONCE/submit",
-        _http_header_poster,
-        driver_collect_max=driver_collect_max,
-        backoff_s=0.001,
-    )
-    assert n == 3 * 14
+    state["posts"] = []
+    state["seen_keys"] = set()
+    if path == "write":
+        (
+            features_json(run_pipeline(source)).write.format("caltopo")
+            .option("url", f"{url}/api/v1/layer/ONCE/submit")
+            .mode("append")
+            .save()
+        )
+    else:
+        n = submit_idempotent(
+            run_pipeline(source),
+            f"{url}/api/v1/layer/ONCE/submit",
+            _http_header_poster,
+            backoff_s=0.001,
+        )
+        assert n == 3 * 14
+    assert sum(len(fc["features"]) for fc in state["posts"]) == 3 * 14
     gets = [p.strip("/").split("/")[-3] for p in state["requests"]]
     assert sorted(gets) == maps
 
 
 def test_write_format_survives_503_and_redelivery(spark, fixture_server):
-    """df.write.format("caltopo") posts through the idempotent path:
+    """The caltopo writer posts through the idempotent path:
     two 503s are retried, every feature is recorded exactly once, and
     a second identical save() (a re-run job, a task re-attempt) records
     nothing new."""
@@ -434,7 +398,7 @@ def test_write_format_survives_503_and_redelivery(spark, fixture_server):
 
     def save() -> list:
         (
-            out.write.format("caltopo")
+            features_json(out).write.format("caltopo")
             .option("url", f"{url}/api/v1/layer/WRITE/submit")
             .mode("append")
             .save()

@@ -1,9 +1,9 @@
 """Round-13 pins: the five ADVICE r12 findings, each fixed and
 regression-tested here.
 
-1. `submit_idempotent`'s DRIVER path canonicalizes features (sorted
-   by str(id)) before serializing, exactly like the partition path —
-   a redelivered batch whose collect() order differs must still
+1. `submit_idempotent` canonicalizes each map's features (sorted by
+   id, null first, then by feature text) before serializing — a
+   redelivered batch whose collect() order differs must still
    produce the byte-identical body and therefore the identical
    Idempotency-Key.
 2. `post_idempotent` fails FAST on deterministic 4xx client errors
@@ -25,6 +25,7 @@ import sys
 import urllib.error
 
 import pytest
+from conftest import strict_loads
 from pyspark.sql import functions as F
 
 from etl_caltopo_spark.caltopo.fixtures import fixture_envelope_df
@@ -42,6 +43,7 @@ class _RecordingPoster:
         self.attempts: list[tuple[str, str]] = []
 
     def __call__(self, url: str, body: str, headers: dict) -> None:
+        strict_loads(body)
         self.attempts.append((body, headers.get("Idempotency-Key")))
         if len(self.attempts) <= self.fail_first:
             raise urllib.error.HTTPError(url, self.code, "err", None, None)
@@ -49,23 +51,35 @@ class _RecordingPoster:
 
 def test_driver_path_body_is_canonicalized_across_row_order(spark):
     """ADVICE r12 (medium): two submissions of the SAME rows in
-    different collect() orders must serialize byte-identically on the
-    driver path — otherwise a redelivery carries a different key and
-    double-submits."""
+    different collect() orders must serialize byte-identically —
+    otherwise a redelivery carries a different key and double-submits.
+    That holds with a repeated id (ordered by the feature text after
+    the id) and with a null id (first)."""
     out = run_pipeline(fixture_envelope_df(spark))
+    out = out.unionByName(
+        out.filter("id IN ('F1', 'F3a')").selectExpr(
+            "CASE WHEN id = 'F1' THEN NULL ELSE 'F5' END AS id",
+            *[c for c in out.columns if c != "id"],
+        )
+    )
     asc = _RecordingPoster()
     desc = _RecordingPoster()
     n1 = submit_idempotent(
-        out.orderBy("id"), "http://x/submit", asc, backoff_s=0.001
+        out.orderBy("id", "callsign"), "http://x/submit", asc, backoff_s=0.001
     )
     n2 = submit_idempotent(
-        out.orderBy(F.desc("id")), "http://x/submit", desc, backoff_s=0.001
+        out.orderBy(F.desc("id"), F.desc("callsign")),
+        "http://x/submit",
+        desc,
+        backoff_s=0.001,
     )
-    assert n1 == n2 > 0
+    assert n1 == n2 == 16
     assert asc.attempts[0] == desc.attempts[0]  # same body, same key
     feats = json.loads(asc.attempts[0][0])["features"]
-    ids = [str(f["id"]) for f in feats]
-    assert ids == sorted(ids)
+    ids = [f["id"] for f in feats]
+    assert ids[0] is None
+    assert ids[1:] == sorted(ids[1:])
+    assert ids.count("F5") == 2
 
 
 def test_post_idempotent_fails_fast_on_deterministic_4xx():
