@@ -128,14 +128,17 @@ class _Posted(WriterCommitMessage):
 
 class CalTopoWriter(DataSourceArrowWriter):
     """Executor-side FeatureCollection POST as a native write format
-    (R16, ``task.ts:154-159``): ``sink.features_json(df).write
-    .format("caltopo").option("url", ...).mode("append").save()`` posts
-    each partition's maps through ``sink.post_maps``, as
-    ``sink.submit_idempotent`` does on the driver, so every body
-    carries its idempotency key and retries a 503.  A map held whole
-    by one partition (as the ``caltopo`` read leaves it) posts the body
-    the submit posts.  A failed partition retries alone, and its
-    re-sent bodies collapse on their keys."""
+    (R16, ``task.ts:154-159``): ``sink.features_json(df)
+    .repartition("share_id").write.format("caltopo").option("url", ...)
+    .mode("append").save()`` posts each partition's maps through
+    ``sink.post_maps``, as ``sink.submit_idempotent`` does on the
+    driver, so every body carries its idempotency key and retries a
+    503.  The hash repartition holds each map whole in one partition
+    (AQE coalescing only merges whole partitions), so each map posts
+    the body, and key, the submit posts.  Without it, a map split over
+    several partitions posts one body per partition, keyed by that
+    split.  A failed partition retries alone, and its re-sent bodies
+    collapse on their keys."""
 
     def __init__(self, options: dict, schema) -> None:
         self.url = options.get("url", "")

@@ -37,7 +37,8 @@ def run_from_api(
     fetch the map delta, run the transform pipeline.  Submit the result
     with ``sink.submit_idempotent`` (one POST per map from the driver)
     or, beyond what the driver may collect,
-    ``sink.features_json(df).write.format("caltopo")``."""
+    ``sink.features_json(df).repartition("share_id")
+    .write.format("caltopo")``, which posts the same bodies."""
     cfg = validate_env(env)
     envelopes = fetch_envelopes(spark, [cfg["ShareId"]], since, fetcher)
     return run_pipeline(envelopes)

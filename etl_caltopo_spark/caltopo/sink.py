@@ -208,7 +208,8 @@ def submit_idempotent(
     :func:`post_maps` posts one FeatureCollection per map.  When no
     feature survives, one empty FeatureCollection is posted.  The
     collect is bounded by ``spark.driver.maxResultSize``; beyond it,
-    write ``features_json(df)`` with the ``caltopo`` format.  The
+    write ``features_json(df).repartition("share_id")`` with the
+    ``caltopo`` format, which posts the same bodies.  The
     frame's storage level is left as the caller set it.  Returns the
     feature count."""
     retry = {"max_retries": max_retries, "backoff_s": backoff_s}
