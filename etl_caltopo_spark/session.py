@@ -10,16 +10,14 @@ Spark session configured for multi-executor scale:
 - UTC session timezone everywhere (the reference deals in epoch millis,
   /root/reference/task.ts:23).
 - Arrow-accelerated Python interop for the few Pandas-UDF operators.
-- Python tasks start on the installed pyspark: Spark's Python daemon
-  is :mod:`etl_caltopo_spark.worker_daemon`, so executor tasks (the
-  ``caltopo`` read's, ``mapInPandas``/``mapInArrow``, pandas and Python
-  UDFs) no longer re-read the ``pyspark.zip``, py4j zip and jar that
-  ``SPARK_HOME`` puts on their path (~27k entries, 0.13-0.22 s a task
-  on Python 3.11).  A Python DataSource's schema inference and
-  partition planning are not reached: Spark 4.1 starts those workers
-  with ``pyspark.daemon`` whatever the conf says.  The package's parent
-  directory goes on ``spark.executorEnv.PYTHONPATH``, so the daemon
-  module resolves from any working directory.
+- Every Python process Spark starts, DataSource planner daemons
+  included, runs on the installed pyspark: :data:`WORKER_SITE` goes
+  first on ``spark.executorEnv.PYTHONPATH``; its ``sitecustomize``
+  drops the ``pyspark.zip``, py4j zip and jar ``SPARK_HOME`` adds (each
+  task re-reads their ~28k entries on Python 3.11), then runs the next one.
+  ``python -S``/``-I``, another pyspark version or an unimportable py4j
+  leave workers stock.  Check: ``__import__("pyspark").__file__`` in a
+  task, or in a DataSource's ``schema()``, names site-packages.
 """
 
 from __future__ import annotations
@@ -36,11 +34,10 @@ BUILD_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.ui.showConsoleProgress": "false",
-    "spark.python.daemon.module": "etl_caltopo_spark.worker_daemon",
-    "spark.executorEnv.PYTHONPATH": os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))
-    ),
 }
+
+#: holds only the ``sitecustomize`` that prunes Spark's archives from workers
+WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "worker_site")
 
 #: Conf that is safe to (re-)apply on an already-running session.  The
 #: driver hands our queries an externally built SparkSession, so every
@@ -100,10 +97,15 @@ def build_spark(
         shuffle_partitions = int(os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"])
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    # the hook first, a caller's worker path after it
+    worker_path = [WORKER_SITE, extra_conf.pop("spark.executorEnv.PYTHONPATH", "")]
+    path_conf = os.pathsep.join(filter(None, worker_path))
+    builder = builder.config("spark.executorEnv.PYTHONPATH", path_conf)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    if shuffle_partitions is None and "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+    if shuffle_partitions is None and "spark.sql.shuffle.partitions" not in extra_conf:
         # the core count is only known once the context runs
         width = SHUFFLE_PARTITIONS_PER_CORE * spark.sparkContext.defaultParallelism
         spark.conf.set("spark.sql.shuffle.partitions", str(width))

@@ -1,22 +1,12 @@
-"""Spark's Python worker daemon, started on the installed pyspark.
+"""Start every Python process Spark launches on the installed pyspark.
 
-``session.BUILD_CONF`` names this module as ``spark.python.daemon.module``,
-so Spark starts it as ``python -m etl_caltopo_spark.worker_daemon``.
-With ``SPARK_HOME`` set, Spark puts ``pyspark.zip``, the py4j source zip
-and its core jar on every worker's ``PYTHONPATH``, and workers import
-pyspark from the zip.  Every task then calls
-``importlib.invalidate_caches()``, and on Python 3.11 each zipimporter
-re-reads its whole archive directory (~27k entries, 0.13-0.22 s a task
-on a 4-core box).
-
-When the installed pyspark and py4j are importable without those
-archives, and the installed ``pyspark/version.py`` equals the zip's,
-:func:`prune` drops the archives from ``sys.path`` and their importers
-from ``sys.path_importer_cache``.  Otherwise it changes nothing.  Then
-``pyspark.daemon.manager()`` runs unchanged, and every worker it forks
-imports the driver's pyspark from site-packages.  Nothing imports
-pyspark before :func:`prune` runs: not this module, not the package's
-``__init__``.
+``session.build_spark`` puts this directory first on every Python
+worker's path, so ``site`` runs this module before ``pyspark.daemon``
+in executor and DataSource planner daemons alike.  :func:`prune` drops
+the ``pyspark.zip``, py4j zip and jar that ``SPARK_HOME`` adds (on
+Python 3.11 every task re-reads their ~28k entries), then the next
+``sitecustomize`` on the path runs.  Imports neither pyspark nor the
+package, and does nothing when imported under another name.
 """
 
 from __future__ import annotations
@@ -25,6 +15,7 @@ import os
 import sys
 import zipfile
 from importlib.machinery import PathFinder
+from importlib.util import module_from_spec
 
 
 def _is_spark_archive(entry: str) -> bool:
@@ -65,8 +56,15 @@ def prune(path: list[str], cache: dict) -> list[str]:
     return dropped
 
 
-if __name__ == "__main__":
+if __name__ == "sitecustomize":
     prune(sys.path, sys.path_importer_cache)
-    from pyspark.daemon import manager
-
-    manager()
+    # then the next sitecustomize on the path, as site would have run it;
+    # later entries for this directory are skipped, so it never reruns
+    here = os.path.dirname(os.path.abspath(__file__))
+    entries = [os.path.abspath(p or os.curdir) for p in sys.path]
+    start = entries.index(here) + 1
+    rest = [p for p, e in zip(sys.path[start:], entries[start:]) if e != here]
+    spec = PathFinder.find_spec("sitecustomize", rest)
+    if spec is not None and spec.loader is not None:
+        sys.modules["sitecustomize"] = module_from_spec(spec)
+        spec.loader.exec_module(sys.modules["sitecustomize"])

@@ -487,15 +487,21 @@ def test_pipeline_build_is_a_few_gateway_round_trips(spark, monkeypatch):
     """Building the chain hands Spark a few SQL expression texts: each
     ``pyspark.sql.functions`` Column costs several py4j round trips,
     and the chain built from them made ~2,600 per build (~0.5-0.9 s of
-    driver time on every submit); the SQL-text chain makes ~120."""
+    driver time on every submit); the SQL-text chain makes ~120.  Only
+    this thread's commands count: py4j's finalizer thread sends the
+    detaches of earlier, garbage-collected objects whenever it runs."""
+    import threading
+
     from py4j.clientserver import ClientServerConnection
 
     source = fixture_envelope_df(spark)
     sent = []
     send = ClientServerConnection.send_command
+    builder = threading.get_ident()
 
     def counting(self, command, *args, **kwargs):
-        sent.append(command)
+        if threading.get_ident() == builder:
+            sent.append(command)
         return send(self, command, *args, **kwargs)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
