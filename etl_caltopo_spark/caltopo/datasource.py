@@ -27,9 +27,10 @@ forms:
   exactly-once offset tracking in the streaming checkpoint instead of
   a cron guess.
 
-Both yield the same (share_id, body_json) rows as
-``source.fetch_envelopes``, so everything downstream (strict decode,
-transform, folder lookup, sinks) is source-agnostic.
+Both yield (share_id, body_json) rows, one per map and poll, so the
+same chain (strict decode, folder lookup, transform, sinks) runs on
+either.  The source is the package's one map reader:
+``pipeline.run_from_api`` reads through it too.
 
 The endpoint is configurable via ``baseUrl`` so tests point it at a
 local fixture server; no option defaults to a live network call

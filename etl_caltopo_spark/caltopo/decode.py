@@ -27,31 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_caltopo_spark.caltopo.schemas import ENVELOPE_SCHEMA
-
-#: working column <- source property; a property absent from the
-#: envelope is null (quirk Q3)
-_PROPERTY_COLUMNS = {
-    "class": "class",
-    "title": "title",
-    "description": "description",
-    "creator": "creator",
-    "updated": "updated",
-    "marker_symbol": "marker-symbol",
-    "marker_rotation": "marker-rotation",
-    "marker_color": "marker-color",
-    "marker_size": "marker-size",
-    "stroke": "stroke",
-    "stroke_opacity": "stroke-opacity",
-    "stroke_width": "stroke-width",
-    "pattern": "pattern",
-    "fill": "fill",
-    "fill_opacity": "fill-opacity",
-    "folder_id": "folderId",
-    "visible": "visible",
-    "label_visible": "labelVisible",
-    "icon": "icon",
-}
+from etl_caltopo_spark.caltopo.schemas import ENVELOPE_SCHEMA, PROPERTY_COLUMNS
 
 #: the envelope's folder id → title map (task.ts:90), built from its
 #: own ``features`` array, so folder ids never leak across maps.  A
@@ -122,9 +98,10 @@ def decode_envelope(
     return feats.selectExpr(
         *carry,
         "f.id AS id",
+        # a property absent from the envelope is null (quirk Q3)
         *(
             f"f.properties.{_quote(prop)} AS {col}"
-            for col, prop in _PROPERTY_COLUMNS.items()
+            for prop, col in PROPERTY_COLUMNS.items()
         ),
         "f.geometry.type AS geometry_type",
         "f.geometry.coordinates AS geometry_json",

@@ -13,6 +13,8 @@ operator and parsed by the sink (SURVEY §7.4).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -59,6 +61,14 @@ OUTPUT_PROPERTIES_SCHEMA = StructType(
         StructField("icon", StringType(), True),  # quirk Q1: icon-if-present
     ]
 )
+
+#: source property → its flat working column, in declared order (the
+#: order of every body's ``metadata`` keys): ``marker-color`` →
+#: ``marker_color``, ``folderId`` → ``folder_id``
+PROPERTY_COLUMNS = {
+    name: re.sub(r"(?<=[a-z])([A-Z])", r"_\1", name).replace("-", "_").lower()
+    for name in OUTPUT_PROPERTIES_SCHEMA.fieldNames()
+}
 
 #: geometry carrier: type tag + raw coordinates JSON (Type.Any() analog)
 GEOMETRY_SCHEMA = StructType(

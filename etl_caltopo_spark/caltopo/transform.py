@@ -15,32 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_caltopo_spark.caltopo.geometry import truncate_coordinates
+from etl_caltopo_spark.caltopo.schemas import PROPERTY_COLUMNS
 from etl_caltopo_spark.operators.joins import broadcast_lookup_join
-
-#: properties carried into the metadata map (R7: everything under
-#: properties.metadata — task.ts:107 copies the whole source property
-#: bag; keys use the source spelling)
-_METADATA_FIELDS = {
-    "title": "title",
-    "description": "description",
-    "class": "class",
-    "creator": "creator",
-    "updated": "updated",
-    "marker-symbol": "marker_symbol",
-    "marker-rotation": "marker_rotation",
-    "marker-color": "marker_color",
-    "marker-size": "marker_size",
-    "stroke": "stroke",
-    "stroke-opacity": "stroke_opacity",
-    "stroke-width": "stroke_width",
-    "pattern": "pattern",
-    "fill": "fill",
-    "fill-opacity": "fill_opacity",
-    "folderId": "folder_id",
-    "visible": "visible",
-    "labelVisible": "label_visible",
-    "icon": "icon",
-}
 
 
 def split_folders(features: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -67,9 +43,10 @@ def drop_null_geometry(features: DataFrame) -> DataFrame:
     return features.filter("geometry_type IS NOT NULL")
 
 
-#: R7: every non-null source property, keyed by its source spelling
+#: R7: every non-null source property (task.ts:107 copies the whole
+#: property bag), keyed by its source spelling, in declared order
 _METADATA = "map_filter(map({}), (k, v) -> v IS NOT NULL)".format(
-    ", ".join(f"'{key}', CAST({col} AS STRING)" for key, col in _METADATA_FIELDS.items())
+    ", ".join(f"'{key}', CAST({col} AS STRING)" for key, col in PROPERTY_COLUMNS.items())
 )
 #: R13/R14: a Point carrying a marker colour
 _HAS_MARKER = "geometry_type = 'Point' AND marker_color IS NOT NULL"

@@ -53,8 +53,9 @@ from etl_caltopo_spark.queries.registry import query
 from etl_caltopo_spark.session import apply_runtime_conf
 
 #: metadata keys in source spelling → DuckDB value expression (string
-#: already, or CAST for typed values) — must mirror
-#: caltopo/transform.py:_METADATA_FIELDS plus its cast-to-string.
+#: already, or CAST for typed values) — must mirror the fields of
+#: caltopo/schemas.py:OUTPUT_PROPERTIES_SCHEMA, in their order, plus
+#: transform's cast-to-string.
 _META_SQL = [
     ("title", "title"),
     ("description", "description"),

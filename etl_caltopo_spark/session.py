@@ -117,6 +117,13 @@ def build_spark(
 _PYFILES_SHIPPED: set[str] = set()
 
 
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make ``etl_caltopo_spark`` importable on executor Python workers.
 
@@ -127,7 +134,9 @@ def _ship_package(spark: SparkSession) -> None:
     zip of the package via ``addPyFile`` puts it on every worker's
     sys.path regardless of how the session was launched.  Once per
     SparkContext; a few dozen small files, so building the zip is
-    cheap."""
+    cheap.  The zip is removed when the process exits, not before:
+    Spark serves it from this path to executors that start later."""
+    import atexit
     import tempfile
     import zipfile
 
@@ -141,6 +150,7 @@ def _ship_package(spark: SparkSession) -> None:
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     fd, zpath = tempfile.mkstemp(prefix="etl_caltopo_spark_", suffix=".zip")
     os.close(fd)
+    atexit.register(_remove_quietly, zpath)
     with zipfile.ZipFile(zpath, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             if "__pycache__" in root:

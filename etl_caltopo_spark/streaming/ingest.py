@@ -369,10 +369,3 @@ def run_two_phase(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def incremental_high_watermark(df: DataFrame, updated_col: str = "updated") -> int:
-    """Batch-mode incremental state: the max change stamp of this run
-    (persisted via caltopo.source.save_watermark between runs)."""
-    row = df.agg(F.max(updated_col).alias("hw")).collect()[0]
-    return int(row["hw"]) if row["hw"] is not None else 0

@@ -16,6 +16,7 @@ from conftest import strict_loads
 from etl_caltopo_spark.caltopo.fixtures import _feature, fixture_envelope_df
 from etl_caltopo_spark.caltopo.pipeline import run_from_api, run_pipeline
 from etl_caltopo_spark.caltopo.registry import schema
+from etl_caltopo_spark.caltopo.schemas import OUTPUT_PROPERTIES_SCHEMA
 from etl_caltopo_spark.caltopo.sink import features_json, submit_idempotent
 from etl_caltopo_spark.caltopo.source import map_state_url, validate_env
 from etl_caltopo_spark.caltopo.fixtures import fixture_envelope_json
@@ -261,16 +262,50 @@ def test_features_json_without_a_share_id_is_one_map(spark):
     assert len(json.loads(body)["features"]) == 14
 
 
-def test_run_from_api_with_fake_fetcher(spark):
-    urls = []
-
-    def fake_fetcher(url: str) -> str:
-        urls.append(url)
-        return fixture_envelope_json()
-
-    out = run_from_api(spark, {"ShareId": "ABC123"}, fetcher=fake_fetcher)
+def test_run_from_api_reads_through_the_caltopo_source(spark, fixture_server):
+    """``run_from_api`` GETs the map once, through the ``caltopo``
+    source, at the reference's delta-window URL; an invalid env raises
+    before any GET."""
+    url, state = fixture_server
+    state["requests"].clear()
+    for bad in ({}, {"ShareId": ""}):
+        with pytest.raises(ValueError):
+            run_from_api(spark, bad, base_url=url)
+    assert state["requests"] == []
+    out = run_from_api(spark, {"ShareId": "ABC123"}, base_url=url)
     assert out.count() == 14
-    assert urls == ["https://caltopo.com/api/v1/map/ABC123/since/-500"]
+    assert state["requests"] == ["/api/v1/map/ABC123/since/-500"]
+
+
+@pytest.mark.parametrize("corpus", [None, (8, 150)], ids=["fixture", "perfbench-fanout"])
+def test_posted_metadata_keys_follow_the_declared_schema(spark, corpus):
+    """Each posted feature's ``metadata`` holds its non-null source
+    properties in ``OUTPUT_PROPERTIES_SCHEMA`` order, whatever their
+    order in the envelope, less ``marker-color`` on a Point that has
+    one (R14, task.ts:132-136).  The order is part of every body's
+    bytes, and so of its idempotency key."""
+    if corpus is None:
+        bodies = [("fixture-share", fixture_envelope_json())]
+    else:
+        bodies = _perfbench_corpus(*corpus)
+    # posted (non-Folder) feature ids are unique across the maps
+    source = {
+        f["id"]: f for _, body in bodies for f in json.loads(body)["result"]["state"]["features"]
+    }
+    out = run_pipeline(spark.createDataFrame(bodies, "share_id string, body_json string"))
+    declared = OUTPUT_PROPERTIES_SCHEMA.fieldNames()
+    marker_kept = marker_deleted = 0
+    for body in _submitted(out):
+        for feature in json.loads(body)["features"]:
+            src = source[feature["id"]]
+            props = {k: v for k, v in src["properties"].items() if v is not None}
+            point = src["geometry"]["type"] == "Point"
+            expected = [k for k in declared if k in props and not (point and k == "marker-color")]
+            assert list(feature["properties"]["metadata"]) == expected, feature["id"]
+            if "marker-color" in props:
+                marker_deleted += point
+                marker_kept += not point
+    assert marker_deleted and marker_kept  # F7 and F9 in the fixture
 
 
 def test_many_envelopes_fan_out(spark):

@@ -1,37 +1,13 @@
-"""Incremental batch semantics (ref task.ts:68 `since/-500` window):
-high-watermark state between runs + JSON-lines source modes."""
+"""File interchange formats: JSON-lines source modes and ORC/XML
+round trips."""
 
 from __future__ import annotations
 
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
-from etl_caltopo_spark.caltopo.source import load_watermark, save_watermark
 from etl_caltopo_spark.io import read_json
-from etl_caltopo_spark.streaming.ingest import incremental_high_watermark
-
-
-def test_watermark_roundtrip_and_delta_filter(spark, tmp_path):
-    wm_path = str(tmp_path / "wm.json")
-    assert load_watermark(wm_path) == 0  # first run: everything is new
-
-    run1 = spark.createDataFrame(
-        [("a", 100), ("b", 200), ("c", 300)], "id string, updated long"
-    )
-    hw = incremental_high_watermark(run1)
-    assert hw == 300
-    save_watermark(wm_path, hw)
-
-    # second run: only rows newer than the stored watermark survive
-    run2 = spark.createDataFrame(
-        [("b", 200), ("c", 300), ("d", 400), ("e", 500)], "id string, updated long"
-    )
-    delta = run2.filter(F.col("updated") > load_watermark(wm_path))
-    assert {r["id"] for r in delta.collect()} == {"d", "e"}
-    save_watermark(wm_path, incremental_high_watermark(delta))
-    assert load_watermark(wm_path) == 500
 
 
 def test_orc_roundtrip(spark, sf_dir, tmp_path):
@@ -45,26 +21,6 @@ def test_orc_roundtrip(spark, sf_dir, tmp_path):
     assert sorted(r["n_nationkey"] for r in back.collect()) == sorted(
         r["n_nationkey"] for r in nation.collect()
     )
-
-
-def test_envelopes_from_jsonl_source(spark, tmp_path):
-    import json as _json
-
-    from etl_caltopo_spark.caltopo.fixtures import fixture_envelope_json
-    from etl_caltopo_spark.caltopo.pipeline import run_pipeline
-    from etl_caltopo_spark.caltopo.source import envelopes_from_jsonl
-
-    p = tmp_path / "archive.jsonl"
-    p.write_text(
-        "\n".join(
-            _json.dumps({"share_id": f"s{i}", "body": fixture_envelope_json()})
-            for i in range(3)
-        )
-    )
-    envs = envelopes_from_jsonl(spark, str(p))
-    assert envs.columns == ["share_id", "body_json"]
-    out = run_pipeline(envs)
-    assert out.count() == 3 * 14  # file source feeds the same pipeline
 
 
 def test_xml_roundtrip(spark, sf_dir, tmp_path):
